@@ -130,10 +130,9 @@ object DailyRun {
       .option("checkpointLocation", checkpoint)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.sparkSession.conf
-          .set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         batch.withColumn("batch_id", lit(batchId))
           .write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
           .partitionBy("commodity", "link_type", "scrape_date", "batch_id")
           .parquet(rawRoot)
       }

@@ -5,74 +5,49 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.functions.VectorFns
-import graft.operators.{AnnIndex, Dedup, Similarity}
+import graft.operators.{AnnIndex, Similarity}
 
-/** The END-TO-END incremental EMBEDDING ingest pipeline (m15) — the
-  * m12/m14 DAG re-targeted at a vector corpus, where the near-dup
-  * signal is exact cosine and the corpus index IS the serving ANN index
-  * ([[AnnIndex]]): one artifact answers both "is this vector a
-  * duplicate?" (admit) and "what are this query's neighbors?" (serve).
-  * Every arriving batch of (vec_id, embedding) rows runs:
+/** The incremental EMBEDDING ingest pipeline (m15) — every arriving batch
+  * of (vec_id, embedding) rows through [[Frame.ingestBatch]] with this
+  * stage, where the corpus index IS the serving ANN index ([[AnnIndex]]):
+  * one artifact answers both "is this vector a duplicate?" (admit) and
+  * "what are this query's neighbors?" (serve).
   *
-  *   1. GATE — exact decisions only: null/mis-sized vectors reject as
-  *      `bad_vector`, zero-norm vectors as `zero_norm` (cosine is
-  *      undefined on them), never silently dropped.
-  *   2. INTRA-BATCH DEDUP — exact cosine pairs at `threshold` within the
-  *      batch ([[Similarity.cosineNearDupPairs]], the guarded exact form:
-  *      batches are bounded by construction; the documented scale path
-  *      for huge batches is [[Similarity.lshNearDupPairs]]) → connected
-  *      components → min vec_id represents.
-  *   3. ADMIT/REJECT — representatives PROBE the persisted IVF-PQ index
-  *      (top-1, exact-cosine rerank): a hit at `cos >= threshold` rejects
-  *      as `corpus_dup`. The probe scans only `ingest_batch < id` code
-  *      partitions, so a replayed batch never sees its own crashed
-  *      attempt — the per-batch cost is the serve cost (probe + code scan
-  *      + bounded rerank), NEVER an exact scan of the corpus. This is the
-  *      d29/d30 move for vectors: the index is the persisted admit
-  *      structure.
-  *   4. APPEND — admitted vectors land (the corpus growth) and their PQ
-  *      codes append to the index under an `ingest_batch=<id>` partition
-  *      with dynamic overwrite ([[AnnIndex.appendIvfPq]]'s exactly-once
-  *      mode) — stale-codebook encoding by the IVF contract; fresh
-  *      vectors ride stale books until a rebuild.
-  *   5. RECALL MONITOR — recall@k of a bounded sample of the batch's own
-  *      admitted vectors (served from the just-appended index) against
-  *      the exact scan: e19's drift signal riding the ingest loop.
-  *      CADENCED by `monitorEvery` (the exact side is the loop's only
-  *      O(corpus) term — see [[Params]]); a verdict row lands per
-  *      monitored batch, `fired` = mean recall below target.
-  *   6. REBUILD — [[rebuildIndex]] retrains over the accumulated corpus
-  *      into a NEW versioned index directory (e21's recovery); the
-  *      stream's index thunk swaps to it between batches. Decisions are
-  *      index-version-dependent by nature (an approximate probe), so the
-  *      swap point is an explicit operational event; replays of any one
-  *      batch remain exactly-once via partition overwrite.
+  *   - GATE: exact decisions only — null/mis-sized vectors reject as
+  *     `bad_vector`, zero-norm vectors as `zero_norm` (cosine is undefined
+  *     on them);
+  *   - PAIRS: exact cosine pairs at `threshold` within the batch
+  *     ([[Similarity.cosineNearDupPairs]], the guarded exact form: batches
+  *     are bounded by construction; the documented scale path for huge
+  *     batches is [[Similarity.lshNearDupPairs]]);
+  *   - ADMIT: representatives PROBE the persisted IVF-PQ index (top-1,
+  *     exact-cosine rerank); a hit at `cos >= threshold` rejects as
+  *     `corpus_dup` and lands its `dup_cos`. The probe scans only
+  *     `ingest_batch < id` code partitions — the per-batch cost is the
+  *     serve cost (probe + code scan + bounded rerank), NEVER an exact
+  *     scan of the corpus: the d29/d30 move for vectors;
+  *   - AFTER LANDING: the admitted vectors' PQ codes append to the index
+  *     under an `ingest_batch=<id>` partition ([[AnnIndex.appendIvfPq]]'s
+  *     exactly-once mode; fresh vectors ride stale codebooks until a
+  *     rebuild), then the cadenced RECALL MONITOR (recall@k of a bounded
+  *     sample of the batch's admitted vectors against the exact scan,
+  *     e19's drift signal; `fired` = mean recall below target).
   *
-  * EXACTLY-ONCE: identical contract to [[IngestPipeline]]/[[
-  * TextIngestPipeline]] — admitted/rejected/monitor land under
-  * `ingest_batch=<id>` with dynamic partition overwrite, the code append
-  * uses the same mode inside the index, and every read the batch depends
-  * on is filtered to strictly earlier batches.
-  *
-  * Scale: the admit probe is corpus-size-free at query time (nprobe
-  * coarse lists of the list_id-partitioned code scan — the partition
-  * pruning makes the scanned bytes track nprobe/nlist too); the rerank
-  * fetch broadcasts candidates and never shuffles the corpus; the
-  * monitor is bounded by `monitorMax` queries AND cadenced by
-  * `monitorEvery` (its exact side is the loop's only O(corpus) term);
-  * training artifacts load as k-row driver constants; [[AnnIndex
-  * .compactCodes]] folds accumulated per-batch code partitions back into
-  * the base between batches, bounding file-count growth without a
-  * retrain. Batch and corpus vec_ids must be unique and disjoint (mint
-  * batch ids with an offset).
+  * REBUILD — [[rebuildIndex]] retrains over the accumulated corpus into a
+  * NEW versioned index directory (e21's recovery); the stream's index
+  * thunk swaps to it between batches. Decisions are index-version-
+  * dependent by nature (an approximate probe), so the swap point is an
+  * explicit operational event; [[AnnIndex.compactCodes]] folds per-batch
+  * code partitions back into the base without a retrain. Batch and corpus
+  * vec_ids must be unique and disjoint (mint batch ids with an offset).
   */
 object EmbIngestPipeline {
 
-  private[ingest] val AdmittedSchema =
+  private val AdmittedSchema =
     "vec_id BIGINT, embedding ARRAY<FLOAT>, ingest_batch BIGINT"
-  private[ingest] val RejectedSchema =
+  private val RejectedSchema =
     "vec_id BIGINT, reject_reason STRING, dup_cos DOUBLE, ingest_batch BIGINT"
-  private[ingest] val MonitorSchema =
+  private val MonitorSchema =
     "batch STRING, n_queries BIGINT, mean_recall DOUBLE, fired BOOLEAN, " +
       "ingest_batch BIGINT"
 
@@ -125,179 +100,118 @@ object EmbIngestPipeline {
     dir
   }
 
-  /** ONE batch through the whole DAG; lands admitted / rejected /
-    * monitor under `ingest_batch=batchId` and appends the admitted PQ
-    * codes under the same partition inside the index.
-    * `batch` columns: (vec_id BIGINT, embedding ARRAY<FLOAT>).
-    * `timer` brackets the four materialization points (admit / reject /
-    * append / monitor) so a bench can name the dominant per-batch term
-    * instead of guessing it; the default is a no-op passthrough.
+  /** The m15 stage against the IVF-PQ index at `idxDir` (resolved once
+    * per micro-batch by the caller, so a [[rebuildIndex]] swap takes
+    * effect between batches).
     */
-  def ingestBatch(batch: DataFrame, seedVecs: DataFrame, p: Params,
-      outDir: String, batchId: Long, index: () => String,
-      timer: (String, () => Unit) => Unit = (_, f) => f()): Unit = {
-    val spark = batch.sparkSession
-    val idxDir = index()
-    // a micro-batch arrives as ONE source file (1-2 splits): everything
-    // derived from it — the quadratic intra-batch dedup above all —
-    // would run at that parallelism. Spread it across the session's
-    // shuffle width first (hash on the unique id: deterministic, no
-    // round-robin sort; explicit count so AQE's few-MB view of the
-    // exchange can't coalesce it back under the expanding self-join).
-    val spread = batch.repartition(
-      spark.conf.get("spark.sql.shuffle.partitions").toInt, col("vec_id"))
-    // 1. gate — size check BEFORE any norm is computed on a bad vector
-    val gated = spread
-      .select(col("vec_id"), col("embedding"),
-        when(col("embedding").isNull || size(col("embedding")) =!= p.dim,
-          lit("bad_vector")).as("g1"))
-      .withColumn("gate_reason",
-        when(col("g1").isNotNull, col("g1"))
-          .when(VectorFns.norm(col("embedding"), p.dim) === 0.0,
-            lit("zero_norm")))
-      .select(col("vec_id"), col("embedding"), col("gate_reason"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val surv = gated.filter(col("gate_reason").isNull)
-      .select(col("vec_id"), col("embedding"))
-    // 2. intra-batch components; min vec_id represents each component
-    val comp = Dedup.connectedComponents(
-      Similarity.cosineNearDupPairs(surv, "vec_id", "embedding", p.dim,
-          p.threshold, maxRows = p.maxBatchRows)
-        .select(col("id_a"), col("id_b")))
-    val withRep = Frame.withRepresentative(surv, "vec_id", comp)
-    // 3. representatives probe the index (strictly earlier partitions).
-    // Persisted: the serve path evaluates its query relation three times
-    // (probed-list pruning collect, probe broadcast, post-cut vector
-    // re-join), and reps sits on top of the connected-components
-    // iteration — without the pin each evaluation would re-run CC.
-    val reps = withRep.filter(col("vec_id") === col("rep"))
-      .select(col("vec_id"), col("embedding"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val corpusDup = AnnIndex.queryIvfPq(
-        corpus = corpusVecs(spark, seedVecs, outDir, batchId),
-        queries = reps, idCol = "vec_id", vecCol = "embedding", dim = p.dim,
-        k = 1, nprobe = p.nprobe, rerank = p.rerank, dir = idxDir,
-        maxQueryRows = p.maxQueryRows,
-        scanPred = Some(col("ingest_batch") < batchId))
-      .filter(col("cos_sim") >= p.threshold)
-      .select(col("query_id").as("rep"),
-        col("neighbor_id").as("corpus_dup_of"), col("cos_sim").as("dup_cos"))
-    val decided = withRep.join(corpusDup, Seq("rep"), "left")
-      .select(col("vec_id"), col("embedding"),
-        when(col("vec_id") =!= col("rep"),
-          concat(lit("batch_dup:"), col("rep").cast("string")))
-          .when(col("corpus_dup_of").isNotNull,
-            concat(lit("corpus_dup:"), col("corpus_dup_of").cast("string")))
-          .otherwise(lit(null).cast("string")).as("reject_reason"),
-        when(col("vec_id") === col("rep"), col("dup_cos")).as("dup_cos"))
-      .unionByName(gated.filter(col("gate_reason").isNotNull)
-        .select(col("vec_id"), col("embedding"),
-          col("gate_reason").as("reject_reason"),
-          lit(null).cast("double").as("dup_cos")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // coalesce(4): a per-batch partition written at shuffle width lands
-    // dozens of tiny files, and every later batch's corpus read pays
-    // per-file overhead for ALL of them — file count, not row count, is
-    // what accumulates in a long-running loop (see AnnIndex.writeCodes)
-    def land(df: DataFrame, sub: String): Unit =
-      df.coalesce(4).withColumn("ingest_batch", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch")
-        .parquet(s"$outDir/$sub")
-    // 4. land the decisions, then the corpus growth, then its codes.
-    // REJECTED lands FIRST, deliberately: `decided` is persisted, but its
-    // plan READS $outDir/admitted (the corpus probe), so the admitted
-    // write invalidates that cache entry (Spark recaches by path) — in
-    // the old admitted-first order every later landing recomputed the
-    // whole gate→dedup→probe chain (measured: +21 s per batch, the full
-    // decide cost paid twice). Rejected-first materializes the chain
-    // into the cache once ("decide"), admitted rides it ("admit"), and
-    // the invalidation fires only after the last reader.
-    timer("decide", () => land(decided
-      .filter(col("reject_reason").isNotNull)
-      .select(col("vec_id"), col("reject_reason"), col("dup_cos")),
-      "rejected"))
-    val admitted = decided.filter(col("reject_reason").isNull)
-      .select(col("vec_id"), col("embedding"))
-    timer("admit", () => land(admitted, "admitted"))
-    timer("append", () => AnnIndex.appendIvfPq(
-      IngestPipeline.read(spark, s"$outDir/admitted", AdmittedSchema)
-        .filter(col("ingest_batch") === batchId)
-        .select(col("vec_id"), col("embedding")),
-      "vec_id", "embedding", p.dim, idxDir, ingestBatch = Some(batchId)))
-    // 5. recall monitor — CADENCED (p.monitorEvery): its exact side is an
-    // O(corpus) scan by definition, the one term in this loop that cannot
-    // ride the index, so it runs every Nth batch instead of shadowing
-    // every batch of a pipeline whose admit step was built to avoid
-    // exactly that scan. The cadence decision is a pure function of
-    // batchId, so a replayed batch agrees with its first attempt; a
-    // skipped batch lands NO monitor row. On monitored batches: recall@k
-    // of a bounded, deterministic admitted sample, served from the index
-    // INCLUDING this batch's codes. An empty sample lands a fired=NULL
-    // row (the drift-gate allowEmpty rule: a throw inside foreachBatch
-    // wedges the stream on replay).
-    if (batchId % p.monitorEvery == 0) timer("monitor", () => {
-      val sample = IngestPipeline.read(spark, s"$outDir/admitted", AdmittedSchema)
-        .filter(col("ingest_batch") === batchId)
+  def stage(seedVecs: DataFrame, p: Params, outDir: String,
+      idxDir: String): Frame.Stage = {
+    def landed(b: Frame.Batch): DataFrame =
+      Frame.readOrEmpty(b.spark, s"$outDir/admitted", AdmittedSchema)
+        .filter(col("ingest_batch") === b.id)
         .select(col("vec_id"), col("embedding"))
-        .orderBy(col("vec_id")).limit(p.monitorMax)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val nSample = sample.count()
-      val monitor =
-        if (nSample == 0)
-          spark.sql(s"""SELECT 'batch_$batchId' AS batch,
-            CAST(0 AS BIGINT) AS n_queries,
-            CAST(NULL AS DOUBLE) AS mean_recall,
-            CAST(NULL AS BOOLEAN) AS fired""")
-        else {
-          val served = corpusVecs(spark, seedVecs, outDir, batchId + 1)
-          val rec = Similarity.recallAtK(
-            approx = AnnIndex.queryIvfPq(
-              corpus = served, queries = sample, idCol = "vec_id",
-              vecCol = "embedding", dim = p.dim, k = p.monitorK,
-              nprobe = p.nprobe, rerank = p.rerank, dir = idxDir,
-              maxQueryRows = p.maxQueryRows,
-              scanPred = Some(col("ingest_batch") <= batchId)),
-            exact = Similarity.cosineTopK(served, sample, "vec_id",
-              "embedding", p.dim, p.monitorK))
-          // MICRO-averaged recall (total hits / total truth): integer
-          // sums + one double division — bit-reproducible across engines
-          // (a mean of per-query double ratios is summation-order-
-          // dependent in the last ulp), which is what lets the monitor
-          // row be DECLARED and hash-gated (m16) instead of spec-only
-          rec.agg(count(lit(1)).as("n_queries"),
-              (sum(col("hits")).cast("double") /
-                sum(col("n_exact")).cast("double")).as("mean_recall"))
-            .select(lit(s"batch_$batchId").as("batch"), col("n_queries"),
-              col("mean_recall"),
-              (col("mean_recall") < p.recallTarget).as("fired"))
-        }
-      land(monitor, "monitor")
-      sample.unpersist()
-    })
-    reps.unpersist(); decided.unpersist(); gated.unpersist()
+    Frame.Stage(outDir, idCol = "vec_id", carried = Seq("vec_id", "embedding"),
+      rejectedSchema = RejectedSchema, admittedParts = Nil,
+      // size check BEFORE any norm is computed on a bad vector
+      gate = _.select(col("vec_id"), col("embedding"),
+          when(col("embedding").isNull || size(col("embedding")) =!= p.dim,
+            lit("bad_vector")).as("g1"))
+        .withColumn("gate_reason",
+          when(col("g1").isNotNull, col("g1"))
+            .when(VectorFns.norm(col("embedding"), p.dim) === 0.0,
+              lit("zero_norm")))
+        .select(col("vec_id"), col("embedding"), col("gate_reason")),
+      pairs = Similarity.cosineNearDupPairs(_, "vec_id", "embedding", p.dim,
+        p.threshold, maxRows = p.maxBatchRows),
+      // representatives probe the index (strictly earlier partitions).
+      // Pinned: the serve path evaluates its query relation three times
+      // (probed-list pruning collect, probe broadcast, post-cut vector
+      // re-join), and reps sits on top of the connected-components
+      // iteration — without the pin each evaluation would re-run CC.
+      admit = (b, reps) => AnnIndex.queryIvfPq(
+          corpus = corpusVecs(b.spark, seedVecs, outDir, b.id),
+          queries = b.pin(reps.select(col("vec_id"), col("embedding"))),
+          idCol = "vec_id", vecCol = "embedding", dim = p.dim,
+          k = 1, nprobe = p.nprobe, rerank = p.rerank, dir = idxDir,
+          maxQueryRows = p.maxQueryRows,
+          scanPred = Some(col("ingest_batch") < b.id))
+        .filter(col("cos_sim") >= p.threshold)
+        .select(col("query_id").as("rep"),
+          col("neighbor_id").as("corpus_dup_of"), col("cos_sim").as("dup_cos")),
+      // coalesce(4): Frame.land's file-count contract
+      admitted = (_, rows) =>
+        rows.select(col("vec_id"), col("embedding")).coalesce(4),
+      afterLanding = b => {
+        b.timer("append", () => AnnIndex.appendIvfPq(landed(b),
+          "vec_id", "embedding", p.dim, idxDir, ingestBatch = Some(b.id)))
+        // recall monitor — CADENCED (p.monitorEvery): its exact side is an
+        // O(corpus) scan by definition, the one term in this loop that
+        // cannot ride the index. The cadence decision is a pure function
+        // of the batch id, so a replayed batch agrees with its first
+        // attempt; a skipped batch lands NO monitor row. On monitored
+        // batches: recall@k of a bounded, deterministic admitted sample,
+        // served from the index INCLUDING this batch's codes. An empty
+        // sample lands a fired=NULL row (the drift-gate allowEmpty rule:
+        // a throw inside foreachBatch wedges the stream on replay).
+        if (b.id % p.monitorEvery == 0) b.timer("monitor", () => {
+          val sample = landed(b).orderBy(col("vec_id")).limit(p.monitorMax)
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          val monitor =
+            if (sample.count() == 0)
+              b.spark.sql(s"""SELECT 'batch_${b.id}' AS batch,
+                CAST(0 AS BIGINT) AS n_queries,
+                CAST(NULL AS DOUBLE) AS mean_recall,
+                CAST(NULL AS BOOLEAN) AS fired""")
+            else {
+              val served = corpusVecs(b.spark, seedVecs, outDir, b.id + 1)
+              val rec = Similarity.recallAtK(
+                approx = AnnIndex.queryIvfPq(
+                  corpus = served, queries = sample, idCol = "vec_id",
+                  vecCol = "embedding", dim = p.dim, k = p.monitorK,
+                  nprobe = p.nprobe, rerank = p.rerank, dir = idxDir,
+                  maxQueryRows = p.maxQueryRows,
+                  scanPred = Some(col("ingest_batch") <= b.id)),
+                exact = Similarity.cosineTopK(served, sample, "vec_id",
+                  "embedding", p.dim, p.monitorK))
+              // MICRO-averaged recall (total hits / total truth): integer
+              // sums + one double division — bit-reproducible across
+              // engines (a mean of per-query double ratios is
+              // summation-order-dependent in the last ulp), which is what
+              // lets the monitor row be DECLARED and hash-gated (m16)
+              rec.agg(count(lit(1)).as("n_queries"),
+                  (sum(col("hits")).cast("double") /
+                    sum(col("n_exact")).cast("double")).as("mean_recall"))
+                .select(lit(s"batch_${b.id}").as("batch"), col("n_queries"),
+                  col("mean_recall"),
+                  (col("mean_recall") < p.recallTarget).as("fired"))
+            }
+          b.land(monitor, "monitor", coalesceTo = Some(4))
+          sample.unpersist()
+        })
+      })
   }
 
+  /** ONE batch through the DAG; lands admitted / rejected / monitor under
+    * `ingest_batch=batchId` and appends the admitted PQ codes under the
+    * same partition inside the index. `batch` columns: (vec_id BIGINT,
+    * embedding ARRAY<FLOAT>).
+    */
+  def ingestBatch(batch: DataFrame, seedVecs: DataFrame, p: Params,
+      outDir: String, batchId: Long, index: () => String): Unit =
+    Frame.ingestBatch(stage(seedVecs, p, outDir, index()), batch, batchId)
+
   /** The streaming wrapper: a parquet file stream of vector batches
-    * driven through [[ingestBatch]] one micro-batch at a time —
-    * checkpoint replay + partition overwrite = exactly-once, as in the
-    * image/text pipelines. The `index` thunk is re-resolved per batch so
-    * a [[rebuildIndex]] swap takes effect live.
+    * driven through [[ingestBatch]] one micro-batch at a time. The
+    * `index` thunk is re-resolved per batch so a [[rebuildIndex]] swap
+    * takes effect live.
     */
   def stream(spark: SparkSession, srcDir: String, seedVecs: DataFrame,
       p: Params, checkpoint: String, outDir: String,
       index: () => String): StreamingQuery =
-    spark.readStream
-      .schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        ingestBatch(b, seedVecs, p, outDir, id, index)
-      }
-      .start()
+    Frame.fileStream(spark, srcDir, "vec_id BIGINT, embedding ARRAY<FLOAT>",
+      checkpoint) { (b, id) =>
+      ingestBatch(b, seedVecs, p, outDir, id, index)
+    }
 
   /** The audit over the LANDED outputs plus the index's appended code
     * partitions: one row per vector (status, dup cosine), the per-list
@@ -309,8 +223,8 @@ object EmbIngestPipeline {
     */
   def audit(spark: SparkSession, outDir: String, indexDir: String,
       includeMonitor: Boolean = true): DataFrame = {
-    val adm = IngestPipeline.read(spark, s"$outDir/admitted", AdmittedSchema)
-    val rej = IngestPipeline.read(spark, s"$outDir/rejected", RejectedSchema)
+    val adm = Frame.readOrEmpty(spark, s"$outDir/admitted", AdmittedSchema)
+    val rej = Frame.readOrEmpty(spark, s"$outDir/rejected", RejectedSchema)
     val vecRows = adm.select(lit("vec").as("kind"),
         col("vec_id").cast("string").as("key"), lit("admitted").as("detail"),
         lit(null).cast("bigint").as("n1"), lit(null).cast("bigint").as("n2"),
@@ -333,7 +247,7 @@ object EmbIngestPipeline {
     val base = vecRows.unionByName(listRows)
     if (!includeMonitor) base
     else base.unionByName(
-      IngestPipeline.read(spark, s"$outDir/monitor", MonitorSchema)
+      Frame.readOrEmpty(spark, s"$outDir/monitor", MonitorSchema)
         .select(lit("monitor").as("kind"), col("batch").as("key"),
           col("fired").cast("string").as("detail"),
           col("n_queries").as("n1"), lit(null).cast("bigint").as("n2"),

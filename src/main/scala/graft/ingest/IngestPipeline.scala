@@ -1,119 +1,39 @@
 package graft.ingest
 
-import java.math.{BigDecimal => JBigDecimal}
-
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.functions.TextFns
-import graft.operators.{Dedup, Dsir}
+import graft.operators.Dedup
 
-/** The END-TO-END incremental multimodal ingest pipeline (m12) — the DAG a
-  * 100 TB training-data operation runs on every arriving batch of
-  * (image, caption) training pairs, composed from pieces that are each
-  * individually oracle-proven:
+/** The incremental multimodal ingest pipeline (m12) — every arriving batch
+  * of (image, caption) training pairs through [[Frame.ingestBatch]] with
+  * this stage:
   *
-  *   1. DECODE + QUARANTINE — dHash over the image payload
-  *      (`plans.DHashBmp`, codegen); undecodables are rejected with a
-  *      reason, never silently dropped.
-  *   2. INTRA-BATCH DEDUP — banded Hamming pairs within the batch
-  *      ([[Dedup.hammingPairs64]], exact for radius < bands) → connected
-  *      components → each component's min-pair_id member REPRESENTS it
-  *      (d27's documented composition: dedup the batch, then the batch
-  *      against the corpus).
-  *   3. ADMIT/REJECT — representatives' bands join the ACCUMULATED corpus
-  *      index (the committed seed ∪ every previously-admitted batch's
-  *      signatures): no self-join on either side, per-batch cost linear
-  *      in the batch. Two interchangeable corpus sides
-  *      ([[BandIndexState]]): the direct [[Dedup.hammingPairs64Batch]]
-  *      join, or the persisted bucketed band-index probe
-  *      ([[Dedup.hammingPairs64Probe]] + tail) whose per-batch cost is
-  *      independent of corpus size.
-  *   4. DSIR SCORE — admitted captions scored against the trained weight
-  *      table ([[Dsir.withScore]], pure per-row codegen expression).
-  *   5. DRIFT GATE — the batch's caption token distribution chi-squared
-  *      against the trained model ([[Dsir.driftStat]]): one ≤buckets-row
-  *      aggregate + a broadcast join, the retrain trigger riding the
-  *      firehose.
-  *   6. SHARD EXPORT — admitted rows land hash-sharded (m11's manifest
-  *      contract: deterministic md5(pair_id) mod nShards, one shuffle
-  *      keyed by shard).
+  *   - GATE: a 64-bit perceptual signature over the payload (`signature`:
+  *     `plans.DHashBmp` for images, `plans.AudioFp` for audio — m13);
+  *     undecodables are rejected as `quarantined_undecodable`;
+  *   - PAIRS: banded Hamming pairs within the batch
+  *     ([[Dedup.hammingPairs64]], exact for radius < bands);
+  *   - ADMIT: representatives' bands against the corpus [[corpus]] —
+  *     the committed seed signatures ∪ every admitted batch's — on the
+  *     direct join or the persisted [[Dedup.bandIndex64]] probe
+  *     ([[Frame.IndexState]]; the declared m12/m13 queries run the probe);
+  *   - ADMITTED: captions DSIR-scored and hash-sharded
+  *     ([[Frame.scoredShards]]), signatures landed as the index
+  *     contribution;
+  *   - AFTER LANDING: the caption drift gate ([[Frame.landDrift]]).
   *
-  * EXACTLY-ONCE: every output lands under `ingest_batch=<id>` partitions
-  * written with DYNAMIC partition overwrite — a replayed micro-batch
-  * (kill/restart inside foreachBatch) recomputes the same deterministic
-  * result (its corpus index reads only `ingest_batch < id`) and
-  * OVERWRITES its own partitions, so restarts neither duplicate nor drop
-  * a pair. The streaming checkpoint replays the interrupted batch with
-  * the same batch id; determinism + partition overwrite make the landing
-  * idempotent. Crashed partial writes live under `_temporary` and are
-  * invisible to reads.
-  *
-  * Scale: the only per-batch joins are banded (batch-linear); the index
-  * read is partition-pruned to prior batches; training artifacts are
-  * bounded driver pulls (≤ buckets rows) computed ONCE per corpus
-  * version, not per batch; scoring/sharding are narrow per-row
-  * expressions. Nothing in the loop scans the corpus payloads — only the
-  * 3-column signature index. At 10⁹-asset corpus scale the admit step
-  * PROBES the persisted bucketed band index instead of re-shuffling the
-  * accumulated signature relation: pass
-  * `admitIndex = () => Some(BandIndexState(table, watermark))` (the d29
-  * shape — measured flat across 50× corpus growth; [[buildIndex]]
-  * bootstraps it, [[compactIndex]] folds admitted tails in, and the
-  * declared m12/m13 queries run this path). See [[BandIndexState]] for
-  * the exact semantics, including overlap tolerance across
-  * compaction/kill races.
+  * The admit machinery is pure Hamming-space and does not care which
+  * modality produced the bits, so ONE pipeline serves both the image and
+  * the audio ingest streams. Nothing in the loop scans the corpus payloads
+  * — only the 3-column signature index.
   */
 object IngestPipeline {
 
-  /** The admit step's corpus-pair source for one micro-batch.
-    *
-    * `None` (direct): [[Dedup.hammingPairs64Batch]] against the
-    * accumulated signature relation — re-explodes and re-SHUFFLES the
-    * corpus on every micro-batch. Fine at bootstrap/fixture scale;
-    * O(corpus) per batch in a long-running loop.
-    *
-    * `Some(BandIndexState(table, compactedThrough))` (probe): the d29
-    * shape — a PERSISTED bucketed [[Dedup.bandIndex64]] table covering
-    * seed ∪ admitted(ingest_batch <= compactedThrough) is probed in
-    * place ([[Dedup.hammingPairs64Probe]], zero corpus-side exchanges —
-    * the scan is bucket-aligned), and only the TAIL (signatures admitted
-    * by batches after the watermark) is exploded per batch. Per-batch
-    * cost: O(batch + tail), with the tail bounded by the compaction
-    * cadence — independent of corpus size.
-    *
-    * The state is resolved through a thunk EVERY micro-batch, so a
-    * compaction that lands between batches takes effect without
-    * restarting the stream. Overlap tolerance: if compaction rewrote the
-    * index but the caller's watermark is stale (kill between compaction
-    * and the state swap), the tail re-covers batches already folded into
-    * the index — pairs found on BOTH paths collapse in the admit min()
-    * aggregate, so nothing is duplicated or dropped (spec-asserted,
-    * IngestStreamSpec).
-    */
-  final case class BandIndexState(table: String, compactedThrough: Long)
-
-  /** Corpus-version artifacts, trained ONCE and shipped to every batch:
-    * DSIR weight table, drift reference distribution, both ≤ `buckets`
-    * rows by construction.
-    */
-  final case class Trained(
-      weights: Map[Long, JBigDecimal],
-      dist: Map[Long, Long],
-      distTotal: Long,
-      buckets: Int,
-      driftThreshold: Double)
-
-  def train(corpusDocs: DataFrame, idCol: String, textCol: String,
-      sourceCol: String, targetSource: String, buckets: Int,
-      driftThreshold: Double): Trained = {
-    val w = Dsir.trainWeights(corpusDocs, idCol, textCol, sourceCol,
-      targetSource, buckets)
-    val (dist, tot) = Dsir.trainDist(corpusDocs, textCol, buckets)
-    Trained(w, dist, tot, buckets, driftThreshold)
-  }
-
+  private val SourceSchema =
+    "pair_id BIGINT, img_name STRING, payload BINARY, caption STRING"
   /** Landed-admitted schema (explicit: reads must survive an empty or
     * crash-partial output directory where inference has nothing to read).
     */
@@ -122,248 +42,83 @@ object IngestPipeline {
       "n_tokens BIGINT, dsir_score DOUBLE, ingest_batch BIGINT, shard BIGINT"
   private val RejectedSchema =
     "pair_id BIGINT, img_name STRING, reject_reason STRING, ingest_batch BIGINT"
-  private val DriftSchema =
-    "batch STRING, n_terms BIGINT, chi2_micro BIGINT, drifted BOOLEAN, " +
-      "ingest_batch BIGINT"
 
-  /** Delegates to the shared frame ([[Frame.readOrEmpty]]); kept as the
-    * module-local name every pipeline read goes through.
+  /** The signature corpus: seed (item_id, hi, lo) ∪ signatures admitted
+    * by earlier batches, banded with [[Dedup.bandIndex64]].
     */
-  private[ingest] def read(spark: SparkSession, dir: String, schema: String): DataFrame =
-    Frame.readOrEmpty(spark, dir, schema)
-
-  /** The corpus signature index as batch `belowBatch` must see it:
-    * seed (item_id, hi, lo) ∪ signatures admitted by STRICTLY EARLIER
-    * batches — the filter is what makes a replayed batch deterministic
-    * (its own partial output from a crashed attempt is never an input).
-    */
-  def corpusIndex(spark: SparkSession, seedSig: DataFrame, outDir: String,
-      belowBatch: Long): DataFrame =
-    seedSig.select(col("item_id").cast("string").as("item_id"),
-        col("hi"), col("lo"))
-      .unionByName(Frame.strictlyEarlier(spark, s"$outDir/admitted",
-          AdmittedSchema, belowBatch)
-        .select(col("pair_id").cast("string").as("item_id"),
-          col("hi"), col("lo")))
-
-  /** One micro-batch's (batch-representative × corpus) near-dup pairs —
-    * the admit step's corpus side, on either the direct path or the
-    * persisted-index probe path (see [[BandIndexState]]). Factored out of
-    * [[ingestBatch]] so the spec can assert the probe path's PHYSICAL
-    * plan: the index scan is bucket-aligned, with no Exchange above it.
-    * Output (id_new, id_corpus, hamming); duplicates across the
-    * probe/tail union are tolerated by contract — the caller aggregates
-    * with min().
-    */
-  private[graft] def admitPairs(spark: SparkSession, seedSig: DataFrame,
-      reps: DataFrame, outDir: String, batchId: Long, bands: Int,
-      radius: Int, state: Option[BandIndexState]): DataFrame = state match {
-    case None =>
-      Dedup.hammingPairs64Batch(
-        corpusIndex(spark, seedSig, outDir, batchId), reps,
-        "item_id", "hi", "lo", bands, radius)
-    case Some(BandIndexState(table, compactedThrough)) =>
-      // the bucketed index covers seed ∪ admitted(<= compactedThrough):
-      // scanned in place, zero corpus-side exchanges
-      val probed = Dedup.hammingPairs64Probe(spark.table(table), reps,
-        "item_id", "hi", "lo", bands, radius)
-      // the not-yet-compacted tail: admitted by batches after the
-      // watermark and before this one — bounded by compaction cadence
-      val tail = read(spark, s"$outDir/admitted", AdmittedSchema)
-        .filter(col("ingest_batch") > compactedThrough &&
-          col("ingest_batch") < batchId)
-        .select(col("pair_id").cast("string").as("item_id"),
+  def corpus(seedSig: DataFrame, outDir: String, bands: Int,
+      radius: Int): Frame.Corpus =
+    new Frame.Corpus(seedSig.select(col("item_id").cast("string").as("item_id"),
+        col("hi"), col("lo")), outDir, AdmittedSchema, ("id_new", "id_corpus")) {
+      protected def fromAdmitted(admitted: DataFrame): DataFrame =
+        admitted.select(col("pair_id").cast("string").as("item_id"),
           col("hi"), col("lo"))
-      probed.unionByName(Dedup.hammingPairs64Batch(tail, reps,
-        "item_id", "hi", "lo", bands, radius))
-  }
+      protected def bandIndex(rows: DataFrame): DataFrame =
+        Dedup.bandIndex64(rows, "item_id", "hi", "lo", bands)
+      // pair_id is the stream's natural unique key: no id-check jobs
+      def batchPairs(rows: DataFrame): DataFrame =
+        Dedup.hammingPairs64(rows, "pair_id", "hi", "lo", bands, radius,
+          checkIds = false)
+      protected def direct(corpus: DataFrame, reps: DataFrame): DataFrame =
+        Dedup.hammingPairs64Batch(corpus, reps, "item_id", "hi", "lo",
+          bands, radius)
+      protected def probe(index: DataFrame, reps: DataFrame,
+          batchId: Long): DataFrame =
+        Dedup.hammingPairs64Probe(index, reps, "item_id", "hi", "lo",
+          bands, radius)
+    }
 
-  /** Build (or fully REBUILD) the persisted bucketed band index covering
-    * seed ∪ admitted(ingest_batch <= through): the once-per-bootstrap
-    * explode the probe path amortizes. Drops any orphaned warehouse
-    * directory first (a fresh in-memory catalog may not know a table
-    * whose directory survives from an earlier JVM — CTAS refuses such a
-    * location).
+  /** The m12/m13 stage over `corpus`; `admitIndex` is resolved once per
+    * micro-batch (None = the direct admit join).
     */
-  def buildIndex(spark: SparkSession, seedSig: DataFrame, outDir: String,
-      table: String, nBuckets: Int, bands: Int, through: Long): BandIndexState = {
-    dropTable(spark, table)
-    graft.util.Layout.writeBucketed(
-      Dedup.bandIndex64(corpusIndex(spark, seedSig, outDir, through + 1),
-          "item_id", "hi", "lo", bands)
-        .repartition(nBuckets, col("bk")),
-      table, "bk", nBuckets, Some("bk"))
-    BandIndexState(table, through)
-  }
+  def stage(corpus: Frame.Corpus, trained: Frame.Trained, nShards: Int,
+      signature: Column => Column,
+      admitIndex: () => Option[Frame.IndexState]): Frame.Stage =
+    Frame.Stage(corpus.outDir, idCol = "pair_id",
+      carried = Seq("pair_id", "img_name", "caption", "hi", "lo"),
+      rejectedSchema = RejectedSchema, admittedParts = Seq("shard"),
+      gate = _.select(col("pair_id"), col("img_name"), col("caption"),
+          signature(col("payload")).as("dh"))
+        .select(col("pair_id"), col("img_name"), col("caption"),
+          col("dh.hi").as("hi"), col("dh.lo").as("lo"))
+        .withColumn("gate_reason",
+          when(col("hi").isNull, lit("quarantined_undecodable"))),
+      pairs = corpus.batchPairs,
+      admit = (b, reps) => corpus.corpusDup(
+        reps.select(col("pair_id").as("item_id"), col("hi"), col("lo")),
+        b.id, admitIndex()),
+      admitted = (_, rows) => Frame.scoredShards(rows, "pair_id", "caption",
+          trained, nShards, AdmittedSchema)(
+        _.withColumn("n_tokens", TextFns.tokenCount(col("caption")))),
+      afterLanding = Frame.landDrift(trained, "caption"))
 
-  /** FOLD-IN compaction: extend the index from watermark
-    * `state.compactedThrough` to `newThrough` by appending the tail's
-    * band rows — the already-indexed corpus is copied bucket-to-bucket,
-    * never re-exploded or re-banded. Writes a NEW table (`newTable` must
-    * differ from the old: Spark rightly refuses to overwrite a relation
-    * its plan still reads, and versioned tables are the crash-safe shape
-    * anyway — the old index stays readable until the caller swaps its
-    * [[BandIndexState]]). A kill BETWEEN this compaction and the state
-    * swap is safe: the stale state's tail overlaps the new index, and
-    * overlap collapses in the admit min() (see [[BandIndexState]]).
-    * Declared-proven fold-in ≡ rebuild ≡ brute force (d31).
+  /** ONE batch through the DAG; lands admitted / rejected / drift under
+    * `ingest_batch=batchId`. `batch` columns: (pair_id BIGINT, img_name,
+    * payload BINARY, caption).
     */
-  def compactIndex(spark: SparkSession, state: BandIndexState,
-      outDir: String, newTable: String, nBuckets: Int, bands: Int,
-      newThrough: Long): BandIndexState = {
-    require(newTable != state.table,
-      s"compaction must write a NEW versioned table (got ${state.table} twice)")
-    val tailSig = read(spark, s"$outDir/admitted", AdmittedSchema)
-      .filter(col("ingest_batch") > state.compactedThrough &&
-        col("ingest_batch") <= newThrough)
-      .select(col("pair_id").cast("string").as("item_id"),
-        col("hi"), col("lo"))
-    dropTable(spark, newTable)
-    graft.util.Layout.writeBucketed(
-      spark.table(state.table)
-        .unionByName(Dedup.bandIndex64(tailSig, "item_id", "hi", "lo", bands))
-        .repartition(nBuckets, col("bk")),
-      newTable, "bk", nBuckets, Some("bk"))
-    BandIndexState(newTable, newThrough)
-  }
-
-  private[ingest] def dropTable(spark: SparkSession, table: String): Unit =
-    Frame.dropTable(spark, table)
-
-  /** ONE batch through the whole DAG; lands admitted / rejected / drift
-    * under `ingest_batch=batchId` with dynamic partition overwrite.
-    * `batch` columns: (pair_id BIGINT, img_name, payload BINARY, caption).
-    *
-    * `signature` maps the payload column to a struct(hi, lo) 64-bit
-    * perceptual signature (null ⇒ quarantine) — `DHashBmp` for image
-    * assets (default), `AudioFp(_, rate)` for audio: the admit machinery
-    * is pure Hamming-space and does not care which modality produced the
-    * bits, so ONE pipeline serves both ingest streams.
-    */
-  def ingestBatch(batch: DataFrame, seedSig: DataFrame, trained: Trained,
+  def ingestBatch(batch: DataFrame, seedSig: DataFrame, trained: Frame.Trained,
       bands: Int, radius: Int, nShards: Int, outDir: String,
       batchId: Long,
-      signature: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-        graft.plans.DHashBmp(_),
-      admitIndex: () => Option[BandIndexState] = () => None): Unit = {
-    val spark = batch.sparkSession
-    // a micro-batch arrives as ONE source file (1-2 splits): the per-row
-    // decode below — the batch's heaviest narrow step — would run at
-    // that parallelism. Spread to the session's shuffle width first
-    // (hash on the unique id: deterministic; explicit count so AQE
-    // can't coalesce the small exchange back down).
-    val sig = batch
-      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt,
-        col("pair_id"))
-      .select(col("pair_id"), col("img_name"), col("caption"),
-        signature(col("payload")).as("dh"))
-      .select(col("pair_id"), col("img_name"), col("caption"),
-        col("dh.hi").as("hi"), col("dh.lo").as("lo"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // 2. intra-batch components; min pair_id represents each component
-    val comp = Dedup.connectedComponents(
-      Dedup.hammingPairs64(sig, "pair_id", "hi", "lo", bands, radius,
-        checkIds = false)) // pair_id is the stream's natural unique key
-    val withRep = Frame.withRepresentative(
-      sig.filter(col("hi").isNotNull), "pair_id", comp)
-    // 3. representatives vs the accumulated index (strictly earlier
-    // batches) — direct join or persisted-index probe per [[BandIndexState]]
-    val reps = withRep.filter(col("pair_id") === col("rep"))
-      .select(col("pair_id").as("item_id"), col("hi"), col("lo"))
-    val corpusDup =
-      admitPairs(spark, seedSig, reps, outDir, batchId, bands, radius,
-        admitIndex())
-      .groupBy(col("id_new").as("rep"))
-      .agg(min(col("id_corpus")).as("corpus_dup_of"))
-    val decided = withRep.join(corpusDup, Seq("rep"), "left")
-      .select(col("pair_id"), col("img_name"), col("caption"),
-        col("hi"), col("lo"),
-        Frame.rejectReason("pair_id").as("reject_reason"))
-      .unionByName(sig.filter(col("hi").isNull)
-        .select(col("pair_id"), col("img_name"), col("caption"),
-          col("hi"), col("lo"),
-          lit("quarantined_undecodable").as("reject_reason")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // REJECTED lands FIRST, deliberately: decided's plan READS
-    // $outDir/admitted (the corpus side of the admit join), so the
-    // admitted write invalidates its cache entry (Spark recaches by
-    // path) — admitted-first would recompute the whole dedup+admit
-    // chain for the rejected landing, every batch. coalesceTo=4
-    // (Frame.land's file-count contract): admitted is already
-    // width-controlled by the shard repartition, rejected is not.
-    Frame.land(decided.filter(col("reject_reason").isNotNull)
-      .select(col("pair_id"), col("img_name"), col("reject_reason")),
-      outDir, "rejected", batchId, coalesceTo = Some(4))
-    // 4+6. score admitted captions, shard, land (one shuffle keyed by shard)
-    val admitted = Dsir.withScore(
-        decided.filter(col("reject_reason").isNull), "caption",
-        trained.weights, trained.buckets)
-      .withColumn("shard", Frame.shardOf("pair_id", nShards))
-      .withColumn("n_tokens", TextFns.tokenCount(col("caption")))
-      .select(col("pair_id"), col("img_name"), col("caption"), col("hi"),
-        col("lo"), col("n_tokens"), col("dsir_score"), col("shard"))
-      .repartition(nShards, col("shard"))
-    Frame.land(admitted, outDir, "admitted", batchId, Seq("shard"))
-    // 5. drift gate over the WHOLE batch's captions (the firehose
-    // distribution, not just survivors). allowEmpty: a zero-token batch
-    // lands a drifted=NULL row instead of throwing — a throw inside
-    // foreachBatch replays deterministically and wedges the stream on
-    // that batch forever.
-    Frame.land(Dsir.driftStat(sig.select(col("caption").as("text")), "text",
-      trained.dist, trained.distTotal, trained.buckets,
-      trained.driftThreshold, s"batch_$batchId", allowEmpty = true),
-      outDir, "drift", batchId)
-    decided.unpersist(); sig.unpersist()
-  }
+      signature: Column => Column = graft.plans.DHashBmp(_),
+      admitIndex: () => Option[Frame.IndexState] = () => None): Unit =
+    Frame.ingestBatch(stage(corpus(seedSig, outDir, bands, radius), trained,
+      nShards, signature, admitIndex), batch, batchId)
 
   /** The streaming wrapper: a parquet file stream of pair batches driven
-    * through [[ingestBatch]] one micro-batch at a time. The checkpoint
-    * replays an interrupted batch under the same id; [[ingestBatch]]'s
-    * partition overwrite makes that replay exactly-once.
+    * through [[ingestBatch]] one micro-batch at a time.
     */
   def stream(spark: SparkSession, srcDir: String, seedSig: DataFrame,
-      trained: Trained, bands: Int, radius: Int, nShards: Int,
+      trained: Frame.Trained, bands: Int, radius: Int, nShards: Int,
       checkpoint: String, outDir: String,
-      signature: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-        graft.plans.DHashBmp(_),
-      admitIndex: () => Option[BandIndexState] = () => None): StreamingQuery =
-    Frame.fileStream(spark, srcDir,
-      "pair_id BIGINT, img_name STRING, payload BINARY, caption STRING",
-      checkpoint) { (b, id) =>
+      signature: Column => Column = graft.plans.DHashBmp(_),
+      admitIndex: () => Option[Frame.IndexState] = () => None): StreamingQuery =
+    Frame.fileStream(spark, srcDir, SourceSchema, checkpoint) { (b, id) =>
       ingestBatch(b, seedSig, trained, bands, radius, nShards, outDir, id,
         signature, admitIndex)
     }
 
-  /** The audit over the LANDED outputs — what the declared m12 query
-    * hash-checks: one row per pair (status, shard, tokens, score), the
-    * m11-contract shard manifest recomputed FROM the landed files, and
-    * the per-batch drift verdicts. Generic (kind, key, detail, n1, n2, x)
-    * rows so one frame carries all three surfaces.
-    */
-  def audit(spark: SparkSession, outDir: String): DataFrame = {
-    val adm = read(spark, s"$outDir/admitted", AdmittedSchema)
-    val rej = read(spark, s"$outDir/rejected", RejectedSchema)
-    val drift = read(spark, s"$outDir/drift", DriftSchema)
-    val pairRows = adm.select(lit("pair").as("kind"),
-        col("pair_id").cast("string").as("key"),
-        lit("admitted").as("detail"),
-        col("shard").cast("bigint").as("n1"), col("n_tokens").as("n2"),
-        col("dsir_score").as("x"))
-      .unionByName(rej.select(lit("pair").as("kind"),
-        col("pair_id").cast("string").as("key"),
-        col("reject_reason").as("detail"),
-        lit(null).cast("bigint").as("n1"), lit(null).cast("bigint").as("n2"),
-        lit(null).cast("double").as("x")))
-    val manifest = adm.groupBy(col("shard").cast("bigint").as("shard"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("sum_tokens"),
-        sum(col("pair_id")).as("id_checksum"))
-      .select(lit("shard").as("kind"), col("shard").cast("string").as("key"),
-        lit(null).cast("string").as("detail"), col("n_docs").as("n1"),
-        col("sum_tokens").as("n2"), col("id_checksum").cast("double").as("x"))
-    val driftRows = drift.select(lit("drift").as("kind"),
-      col("batch").as("key"), col("drifted").cast("string").as("detail"),
-      col("n_terms").as("n1"), col("chi2_micro").as("n2"),
-      lit(null).cast("double").as("x"))
-    pairRows.unionByName(manifest).unionByName(driftRows)
-  }
+  /** The audit the declared m12/m13 queries hash-check ([[Frame.audit]]). */
+  def audit(spark: SparkSession, outDir: String): DataFrame =
+    Frame.audit(spark, outDir, "pair", "pair_id", AdmittedSchema,
+      RejectedSchema, lit("admitted"))
 }

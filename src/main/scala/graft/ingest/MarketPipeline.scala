@@ -241,9 +241,9 @@ object MarketPipeline {
     * replace its filename templating. Use parquet for the normalized layer.
     */
   def writeRaw(df: DataFrame, root: String, format: String = "csv"): Unit = {
-    df.sparkSession.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     df.write
       .mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
       .partitionBy("commodity", "link_type", "scrape_date")
       .option("header", "true")
       .format(format)

@@ -5,303 +5,122 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.functions.TextFns
-import graft.operators.{Dedup, Dsir}
+import graft.operators.Dedup
 
-/** The END-TO-END incremental TEXT ingest pipeline (m14) — the m12 DAG
-  * re-targeted at a document corpus, where the near-dup signature is a
-  * MinHash band relation instead of a 64-bit perceptual hash. The daily
-  * loop a 100 TB text-corpus operation runs on every arriving batch of
-  * documents, composed from pieces that are each individually
-  * oracle-proven:
+/** The incremental TEXT ingest pipeline (m14) — every arriving batch of
+  * documents through [[Frame.ingestBatch]] with this stage:
   *
-  *   1. QUALITY GATE — exact integer decisions only (token-count bounds),
-  *      so the admit set is bit-reproducible across engines: a doc below
-  *      `minTokens` or above `maxTokens` is rejected with a reason, never
-  *      silently dropped. The heuristic language id ([[TextFns.langId]])
-  *      is STAMPED as metadata on admitted rows (routing/reporting), not
-  *      used as a gate — on a synthetic corpus with no stopwords it would
-  *      reject everything, and at production scale lang routing is a
-  *      policy choice layered ON the landed column.
-  *   2. INTRA-BATCH DEDUP — MinHash-LSH verified pairs within the batch
-  *      ([[Dedup.minhashLshPairs]], exact-Jaccard-verified at
-  *      `threshold`) → connected components → each component's min doc_id
-  *      REPRESENTS it (the same composition m12 uses over Hamming pairs).
-  *   3. ADMIT/REJECT — representatives against the ACCUMULATED corpus
-  *      (seed ∪ every previously-admitted batch, `ingest_batch < id` so
-  *      replays are deterministic). Two interchangeable corpus sides
-  *      ([[TextIndexState]]): the direct [[Dedup.incrementalDupPairs]]
-  *      join (re-signatures and re-shuffles the corpus per batch — the
-  *      flaw d30 measured at 6.5× across 30× corpus growth), or the
-  *      PERSISTED bucketed MinHash band index probe
-  *      ([[Dedup.incrementalDupPairsProbe]] + tail) whose per-batch cost
-  *      is independent of corpus size ([[buildIndex]] bootstraps,
-  *      [[compactIndex]] folds admitted tails in — d31's proven fold-in
-  *      pattern on the text key).
-  *   4. DSIR SCORE — admitted docs scored against the trained weight
-  *      table ([[Dsir.withScore]], pure per-row codegen expression).
-  *   5. DRIFT GATE — the WHOLE batch's token distribution (the firehose,
-  *      not just survivors) chi-squared against the trained model
-  *      ([[Dsir.driftStat]], `allowEmpty` so a zero-token batch lands a
-  *      drifted=NULL row instead of wedging the stream on replay).
-  *   6. SHARD EXPORT — admitted rows land hash-sharded (m11's manifest
-  *      contract), one shuffle keyed by shard.
+  *   - GATE: exact integer decisions only (token-count bounds), so the
+  *     admit set is bit-reproducible across engines. The heuristic
+  *     language id ([[TextFns.langId]]) is STAMPED as metadata on admitted
+  *     rows, not used as a gate — on a synthetic corpus with no stopwords
+  *     it would reject everything, and lang routing is a policy choice
+  *     layered ON the landed column;
+  *   - PAIRS: MinHash-LSH verified pairs within the batch
+  *     ([[Dedup.minhashLshPairs]], exact-Jaccard-verified at `threshold`);
+  *   - ADMIT: representatives against the document [[corpus]] on the
+  *     direct [[Dedup.incrementalDupPairs]] join (re-signatures the corpus
+  *     per batch — the flaw d30 measured at 6.5× across 30× corpus growth)
+  *     or the persisted [[Dedup.minhashBandIndex]] probe, whose
+  *     verification semi-join-prunes the corpus text read to candidate
+  *     ids BEFORE shingling;
+  *   - ADMITTED: DSIR-scored, hash-sharded, lang-stamped
+  *     ([[Frame.scoredShards]]);
+  *   - AFTER LANDING: the drift gate over the whole batch's text
+  *     ([[Frame.landDrift]]).
   *
-  * EXACTLY-ONCE: identical contract to [[IngestPipeline]] — every output
-  * lands under `ingest_batch=<id>` partitions with DYNAMIC partition
-  * overwrite; a replayed micro-batch recomputes the same deterministic
-  * result (its corpus reads only `ingest_batch < id`) and overwrites its
-  * own partitions.
-  *
-  * Scale: the only per-batch joins are banded (batch-linear); on the
-  * probe path the corpus side is a bucket-aligned in-place scan (zero
-  * corpus-side exchanges) and verification semi-join-prunes the corpus
-  * text read to candidate ids BEFORE shingling. Batch/corpus doc ids
-  * must be unique and disjoint (the [[Dedup.incrementalDupPairs]]
-  * contract); the ingest-batch id offset is the natural way to mint
-  * batch ids.
+  * Batch/corpus doc ids must be unique and disjoint (the
+  * [[Dedup.incrementalDupPairs]] contract); an ingest-batch id offset is
+  * the natural way to mint batch ids.
   */
 object TextIngestPipeline {
 
-  /** The admit step's corpus source for one micro-batch — the text
-    * analog of [[IngestPipeline.BandIndexState]].
-    *
-    * `None` (direct): [[Dedup.incrementalDupPairs]] against the
-    * accumulated corpus docs — recomputes corpus signatures and
-    * reshuffles its band relation EVERY batch. Fine at bootstrap scale;
-    * O(corpus) per batch in a long-running loop.
-    *
-    * `Some(TextIndexState(table, compactedThrough))` (probe): a
-    * PERSISTED bucketed [[Dedup.minhashBandIndex]] table covering
-    * seed ∪ admitted(ingest_batch <= compactedThrough) is probed in
-    * place, and only the TAIL (docs admitted after the watermark) is
-    * signatured per batch — bounded by compaction cadence. Resolved
-    * through a thunk every micro-batch so compactions take effect live;
-    * a stale watermark after a compaction/kill race makes the tail
-    * re-cover folded batches, and the duplicate pairs collapse in the
-    * admit min() aggregate (same overlap tolerance as m12,
-    * spec-asserted).
-    */
-  final case class TextIndexState(table: String, compactedThrough: Long)
-
-  private[ingest] val AdmittedSchema =
+  private val AdmittedSchema =
     "doc_id BIGINT, text STRING, lang STRING, n_tokens BIGINT, " +
       "dsir_score DOUBLE, ingest_batch BIGINT, shard BIGINT"
-  private[ingest] val RejectedSchema =
+  private val RejectedSchema =
     "doc_id BIGINT, reject_reason STRING, ingest_batch BIGINT"
-  private[ingest] val DriftSchema =
-    "batch STRING, n_terms BIGINT, chi2_micro BIGINT, drifted BOOLEAN, " +
-      "ingest_batch BIGINT"
 
-  /** The corpus documents as batch `belowBatch` must see them: the seed
-    * (doc_id, text) ∪ docs admitted by STRICTLY EARLIER batches — the
-    * filter is what makes a replayed batch deterministic.
+  /** The document corpus: seed (doc_id, text) ∪ docs admitted by earlier
+    * batches, banded with [[Dedup.minhashBandIndex]].
     */
-  def corpusDocs(spark: SparkSession, seedDocs: DataFrame, outDir: String,
-      belowBatch: Long): DataFrame =
-    seedDocs.select(col("doc_id"), col("text"))
-      .unionByName(Frame.strictlyEarlier(spark, s"$outDir/admitted",
-          AdmittedSchema, belowBatch)
-        .select(col("doc_id"), col("text")))
-
-  /** One micro-batch's (representative × corpus) near-dup pairs on either
-    * corpus side (see [[TextIndexState]]). Factored out of [[ingestBatch]]
-    * so the spec can assert the probe path's physical plan (bucket-aligned
-    * index scan, no corpus-side Exchange). Output
-    * (batch_id, corpus_id, jaccard); duplicates across the probe/tail
-    * union are tolerated by contract — the caller aggregates with min().
-    */
-  private[graft] def admitPairs(spark: SparkSession, seedDocs: DataFrame,
-      reps: DataFrame, outDir: String, batchId: Long, n: Int,
-      numHashes: Int, rowsPerBand: Int, threshold: Double,
-      state: Option[TextIndexState]): DataFrame = state match {
-    case None =>
-      Dedup.incrementalDupPairs(
-        corpusDocs(spark, seedDocs, outDir, batchId), reps,
-        "doc_id", "text", n, numHashes, rowsPerBand, threshold)
-    case Some(TextIndexState(table, compactedThrough)) =>
+  def corpus(seedDocs: DataFrame, outDir: String, n: Int, numHashes: Int,
+      rowsPerBand: Int, threshold: Double): Frame.Corpus =
+    new Frame.Corpus(seedDocs.select(col("doc_id"), col("text")), outDir,
+        AdmittedSchema, ("batch_id", "corpus_id")) {
+      protected def fromAdmitted(admitted: DataFrame): DataFrame =
+        admitted.select(col("doc_id"), col("text"))
+      protected def bandIndex(rows: DataFrame): DataFrame =
+        Dedup.minhashBandIndex(rows, "doc_id", "text", n, numHashes, rowsPerBand)
+      def batchPairs(rows: DataFrame): DataFrame =
+        Dedup.minhashLshPairs(rows, "doc_id", "text", n, numHashes,
+          rowsPerBand, threshold)
+      protected def direct(corpus: DataFrame, reps: DataFrame): DataFrame =
+        Dedup.incrementalDupPairs(corpus, reps, "doc_id", "text", n,
+          numHashes, rowsPerBand, threshold)
       // verification text for candidate ids: any superset of the index's
       // ids works (the probe semi-join-prunes it to candidates)
-      val corpus = corpusDocs(spark, seedDocs, outDir, batchId)
-      val probed = Dedup.incrementalDupPairsProbe(spark.table(table),
-        corpus, reps, "doc_id", "text", n, numHashes, rowsPerBand, threshold)
-      // the not-yet-compacted tail: admitted after the watermark, before
-      // this batch — bounded by compaction cadence
-      val tail = IngestPipeline.read(spark, s"$outDir/admitted", AdmittedSchema)
-        .filter(col("ingest_batch") > compactedThrough &&
-          col("ingest_batch") < batchId)
-        .select(col("doc_id"), col("text"))
-      probed.unionByName(Dedup.incrementalDupPairs(tail, reps,
-        "doc_id", "text", n, numHashes, rowsPerBand, threshold))
-  }
+      protected def probe(index: DataFrame, reps: DataFrame,
+          batchId: Long): DataFrame =
+        Dedup.incrementalDupPairsProbe(index, upTo(batchId), reps, "doc_id",
+          "text", n, numHashes, rowsPerBand, threshold)
+    }
 
-  /** Build (or fully REBUILD) the persisted bucketed MinHash band index
-    * covering seed ∪ admitted(ingest_batch <= through) — the
-    * once-per-bootstrap signature pass the probe path amortizes.
+  /** The m14 stage over `corpus`; `admitIndex` is resolved once per
+    * micro-batch (None = the direct admit join).
     */
-  def buildIndex(spark: SparkSession, seedDocs: DataFrame, outDir: String,
-      table: String, nBuckets: Int, n: Int, numHashes: Int,
-      rowsPerBand: Int, through: Long): TextIndexState = {
-    IngestPipeline.dropTable(spark, table)
-    graft.util.Layout.writeBucketed(
-      Dedup.minhashBandIndex(corpusDocs(spark, seedDocs, outDir, through + 1),
-          "doc_id", "text", n, numHashes, rowsPerBand)
-        .repartition(nBuckets, col("bk")),
-      table, "bk", nBuckets, Some("bk"))
-    TextIndexState(table, through)
-  }
+  def stage(corpus: Frame.Corpus, trained: Frame.Trained, minTokens: Long,
+      maxTokens: Long, nShards: Int,
+      admitIndex: () => Option[Frame.IndexState]): Frame.Stage =
+    Frame.Stage(corpus.outDir, idCol = "doc_id", carried = Seq("doc_id", "text"),
+      rejectedSchema = RejectedSchema, admittedParts = Seq("shard"),
+      gate = _.select(col("doc_id"), col("text"),
+          TextFns.tokenCount(col("text")).as("n_tokens"),
+          TextFns.langId(col("text")).as("lang"))
+        .withColumn("gate_reason",
+          when(col("n_tokens") < minTokens, lit("below_min_tokens"))
+            .when(col("n_tokens") > maxTokens, lit("above_max_tokens"))),
+      pairs = corpus.batchPairs,
+      admit = (b, reps) => corpus.corpusDup(
+        reps.select(col("doc_id"), col("text")), b.id, admitIndex()),
+      admitted = (b, rows) => Frame.scoredShards(rows, "doc_id", "text",
+          trained, nShards, AdmittedSchema)(
+        _.join(b.gated.select(col("doc_id"), col("lang"), col("n_tokens")),
+          Seq("doc_id"))),
+      afterLanding = Frame.landDrift(trained, "text"))
 
-  /** FOLD-IN compaction: extend the index to `newThrough` by appending
-    * the tail docs' band rows — already-indexed docs are copied
-    * bucket-to-bucket, never re-signatured (the d31 pattern on the
-    * MinHash key). Writes a NEW versioned table; a kill between this
-    * compaction and the caller's state swap is safe (overlap collapses
-    * in the admit min(), see [[TextIndexState]]).
-    */
-  def compactIndex(spark: SparkSession, state: TextIndexState,
-      outDir: String, newTable: String, nBuckets: Int, n: Int,
-      numHashes: Int, rowsPerBand: Int, newThrough: Long): TextIndexState = {
-    require(newTable != state.table,
-      s"compaction must write a NEW versioned table (got ${state.table} twice)")
-    val tailDocs = IngestPipeline.read(spark, s"$outDir/admitted", AdmittedSchema)
-      .filter(col("ingest_batch") > state.compactedThrough &&
-        col("ingest_batch") <= newThrough)
-      .select(col("doc_id"), col("text"))
-    IngestPipeline.dropTable(spark, newTable)
-    graft.util.Layout.writeBucketed(
-      spark.table(state.table)
-        .unionByName(Dedup.minhashBandIndex(tailDocs, "doc_id", "text",
-          n, numHashes, rowsPerBand))
-        .repartition(nBuckets, col("bk")),
-      newTable, "bk", nBuckets, Some("bk"))
-    TextIndexState(newTable, newThrough)
-  }
-
-  /** ONE batch through the whole DAG; lands admitted / rejected / drift
-    * under `ingest_batch=batchId` with dynamic partition overwrite.
-    * `batch` columns: (doc_id BIGINT, text STRING). Batch doc_ids must be
-    * unique and disjoint from the corpus's (mint them with a batch
-    * offset).
+  /** ONE batch through the DAG; lands admitted / rejected / drift under
+    * `ingest_batch=batchId`. `batch` columns: (doc_id BIGINT, text
+    * STRING).
     */
   def ingestBatch(batch: DataFrame, seedDocs: DataFrame,
-      trained: IngestPipeline.Trained, n: Int, numHashes: Int,
+      trained: Frame.Trained, n: Int, numHashes: Int,
       rowsPerBand: Int, threshold: Double, minTokens: Long, maxTokens: Long,
       nShards: Int, outDir: String, batchId: Long,
-      admitIndex: () => Option[TextIndexState] = () => None): Unit = {
-    val spark = batch.sparkSession
-    // a micro-batch arrives as ONE source file (1-2 splits) — spread to
-    // the session's shuffle width before the per-row gate and the banded
-    // dedup (hash on the unique id: deterministic; explicit count so AQE
-    // can't coalesce the small exchange back down)
-    val spread = batch.repartition(
-      spark.conf.get("spark.sql.shuffle.partitions").toInt, col("doc_id"))
-    // 1. quality gate — integer-exact decisions; langId stamped as metadata
-    val gated = spread
-      .select(col("doc_id"), col("text"),
-        TextFns.tokenCount(col("text")).as("n_tokens"),
-        TextFns.langId(col("text")).as("lang"))
-      .withColumn("gate_reason",
-        when(col("n_tokens") < minTokens, lit("below_min_tokens"))
-          .when(col("n_tokens") > maxTokens, lit("above_max_tokens")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val surv = gated.filter(col("gate_reason").isNull)
-      .select(col("doc_id"), col("text"))
-    // 2. intra-batch components; min doc_id represents each component
-    val comp = Dedup.connectedComponents(
-      Dedup.minhashLshPairs(surv, "doc_id", "text", n, numHashes,
-          rowsPerBand, threshold)
-        .select(col("id_a"), col("id_b")))
-    val withRep = Frame.withRepresentative(surv, "doc_id", comp)
-    // 3. representatives vs the accumulated corpus — direct join or
-    // persisted-index probe per [[TextIndexState]]
-    val reps = withRep.filter(col("doc_id") === col("rep"))
-      .select(col("doc_id"), col("text"))
-    val corpusDup =
-      admitPairs(spark, seedDocs, reps, outDir, batchId, n, numHashes,
-        rowsPerBand, threshold, admitIndex())
-      .groupBy(col("batch_id").as("rep"))
-      .agg(min(col("corpus_id")).as("corpus_dup_of"))
-    val decided = withRep.join(corpusDup, Seq("rep"), "left")
-      .select(col("doc_id"), col("text"),
-        Frame.rejectReason("doc_id").as("reject_reason"))
-      .unionByName(gated.filter(col("gate_reason").isNotNull)
-        .select(col("doc_id"), col("text"),
-          col("gate_reason").as("reject_reason")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // REJECTED lands FIRST, deliberately: decided's plan READS
-    // $outDir/admitted (the corpus side of the admit join), so the
-    // admitted write invalidates its cache entry (Spark recaches by
-    // path) — admitted-first would recompute the whole dedup+admit
-    // chain for the rejected landing, every batch. coalesceTo=4
-    // (Frame.land's file-count contract).
-    Frame.land(decided.filter(col("reject_reason").isNotNull)
-      .select(col("doc_id"), col("reject_reason")),
-      outDir, "rejected", batchId, coalesceTo = Some(4))
-    // 4+6. score admitted docs, shard, land (one shuffle keyed by shard)
-    val admitted = Dsir.withScore(
-        decided.filter(col("reject_reason").isNull), "text",
-        trained.weights, trained.buckets)
-      .withColumn("shard", Frame.shardOf("doc_id", nShards))
-      .join(gated.select(col("doc_id"), col("lang"), col("n_tokens")),
-        Seq("doc_id"))
-      .select(col("doc_id"), col("text"), col("lang"), col("n_tokens"),
-        col("dsir_score"), col("shard"))
-      .repartition(nShards, col("shard"))
-    Frame.land(admitted, outDir, "admitted", batchId, Seq("shard"))
-    // 5. drift gate over the WHOLE batch's text (the firehose
-    // distribution, not just survivors); allowEmpty — see scaladoc
-    Frame.land(Dsir.driftStat(gated.select(col("text")), "text",
-      trained.dist, trained.distTotal, trained.buckets,
-      trained.driftThreshold, s"batch_$batchId", allowEmpty = true),
-      outDir, "drift", batchId)
-    decided.unpersist(); gated.unpersist()
-  }
+      admitIndex: () => Option[Frame.IndexState] = () => None): Unit =
+    Frame.ingestBatch(stage(
+      corpus(seedDocs, outDir, n, numHashes, rowsPerBand, threshold),
+      trained, minTokens, maxTokens, nShards, admitIndex),
+      batch, batchId)
 
   /** The streaming wrapper: a parquet file stream of document batches
-    * driven through [[ingestBatch]] one micro-batch at a time. The
-    * checkpoint replays an interrupted batch under the same id;
-    * [[ingestBatch]]'s partition overwrite makes that replay exactly-once.
+    * driven through [[ingestBatch]] one micro-batch at a time.
     */
   def stream(spark: SparkSession, srcDir: String, seedDocs: DataFrame,
-      trained: IngestPipeline.Trained, n: Int, numHashes: Int,
+      trained: Frame.Trained, n: Int, numHashes: Int,
       rowsPerBand: Int, threshold: Double, minTokens: Long, maxTokens: Long,
       nShards: Int, checkpoint: String, outDir: String,
-      admitIndex: () => Option[TextIndexState] = () => None): StreamingQuery =
+      admitIndex: () => Option[Frame.IndexState] = () => None): StreamingQuery =
     Frame.fileStream(spark, srcDir, "doc_id BIGINT, text STRING",
       checkpoint) { (b, id) =>
       ingestBatch(b, seedDocs, trained, n, numHashes, rowsPerBand,
         threshold, minTokens, maxTokens, nShards, outDir, id, admitIndex)
     }
 
-  /** The audit over the LANDED outputs — what the declared m14 query
-    * hash-checks: one row per doc (status+lang, shard, tokens, score),
-    * the m11-contract shard manifest recomputed FROM the landed files,
-    * and the per-batch drift verdicts. Same generic
-    * (kind, key, detail, n1, n2, x) shape as [[IngestPipeline.audit]].
+  /** The audit the declared m14 query hash-checks ([[Frame.audit]]); an
+    * admitted doc's detail carries its stamped lang.
     */
-  def audit(spark: SparkSession, outDir: String): DataFrame = {
-    val adm = IngestPipeline.read(spark, s"$outDir/admitted", AdmittedSchema)
-    val rej = IngestPipeline.read(spark, s"$outDir/rejected", RejectedSchema)
-    val drift = IngestPipeline.read(spark, s"$outDir/drift", DriftSchema)
-    val docRows = adm.select(lit("doc").as("kind"),
-        col("doc_id").cast("string").as("key"),
-        concat(lit("admitted:"), col("lang")).as("detail"),
-        col("shard").cast("bigint").as("n1"), col("n_tokens").as("n2"),
-        col("dsir_score").as("x"))
-      .unionByName(rej.select(lit("doc").as("kind"),
-        col("doc_id").cast("string").as("key"),
-        col("reject_reason").as("detail"),
-        lit(null).cast("bigint").as("n1"), lit(null).cast("bigint").as("n2"),
-        lit(null).cast("double").as("x")))
-    val manifest = adm.groupBy(col("shard").cast("bigint").as("shard"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("sum_tokens"),
-        sum(col("doc_id")).as("id_checksum"))
-      .select(lit("shard").as("kind"), col("shard").cast("string").as("key"),
-        lit(null).cast("string").as("detail"), col("n_docs").as("n1"),
-        col("sum_tokens").as("n2"), col("id_checksum").cast("double").as("x"))
-    val driftRows = drift.select(lit("drift").as("kind"),
-      col("batch").as("key"), col("drifted").cast("string").as("detail"),
-      col("n_terms").as("n1"), col("chi2_micro").as("n2"),
-      lit(null).cast("double").as("x"))
-    docRows.unionByName(manifest).unionByName(driftRows)
-  }
+  def audit(spark: SparkSession, outDir: String): DataFrame =
+    Frame.audit(spark, outDir, "doc", "doc_id", AdmittedSchema,
+      RejectedSchema, concat(lit("admitted:"), col("lang")))
 }

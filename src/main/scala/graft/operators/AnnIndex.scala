@@ -135,8 +135,8 @@ object AnnIndex {
       case Some(id) =>
         // bootstrap: STATIC overwrite truncates the whole codes dir (a
         // rebuild into a dirty directory must not merge with stale
-        // appends) — pinned per-write because several pipelines set the
-        // SESSION default to dynamic, which would silently keep stale
+        // appends) — pinned per-write because the session default is the
+        // caller's to set, and a dynamic default would silently keep stale
         // batch partitions alongside the new bootstrap; append: DYNAMIC
         // overwrite replaces only this batch's partitions — the
         // streaming-replay exactly-once contract.
@@ -188,7 +188,7 @@ object AnnIndex {
     * (the replay would overwrite an empty `ingest_batch=<id>` partition
     * while the folded copy survives in `-1`, duplicating every row). So
     * `through` must be a checkpoint-COMMITTED watermark, same discipline
-    * as [[graft.ingest.IngestPipeline.compactIndex]]. The old directory
+    * as [[graft.ingest.Frame.Corpus.compactIndex]]. The old directory
     * is untouched and stays serveable until the caller's index thunk
     * swaps; a kill between compaction and the swap leaves the old index
     * exactly as it was (EmbIngestStreamSpec race test).

@@ -514,36 +514,20 @@ object MarketQueries {
     // 2 admits, 1 quarantine. IngestStreamSpec proves the same DAG
     // exactly-once across a mid-stream kill/restart.
     Q("m12_incremental_ingest",
-      (s, dir) => {
-        val out = landingDir(s"m12_ingest_$dir") { tmp =>
-          val trained = graft.ingest.IngestPipeline.train(
-            Tables(s, dir).documents, "doc_id", "text", "source",
-            targetSource = "src0", buckets = 512, driftThreshold = 20000.0)
-          val seed = s.read.parquet(MultimodalQueries.dhashFixturePath)
-            .filter(col("name").rlike("^scene_a"))
-            .select(col("name").as("item_id"),
-              graft.plans.DHashBmp(col("payload")).as("dh"))
-            .select(col("item_id"), col("dh.hi").as("hi"), col("dh.lo").as("lo"))
-          // the DECLARED query runs the PROBE path (the 100 TB shape):
-          // admit joins the persisted bucketed seed band index, not a
-          // per-batch re-shuffle of the signature relation. Seed-only
-          // index (through = -1), pure function of the fixtures ⇒ built
-          // once per session. Identical oracle — the two corpus sides
-          // are pigeonhole-equal by the d29/d31 proofs.
-          val idxTab = "g_m12_seed_bandidx"
-          LayoutQueries.ensureTable(s, idxTab)(
-            graft.ingest.IngestPipeline.buildIndex(s, seed,
-              tmp.resolve("out").toString, idxTab, nBuckets = 8, bands = 4,
-              through = -1L))
-          graft.ingest.IngestPipeline.ingestBatch(
-            s.read.parquet(MultimodalQueries.xmodalFixturePath),
-            seed, trained, bands = 4, radius = 3, nShards = 4,
-            tmp.resolve("out").toString, batchId = 0L,
-            admitIndex = () => Some(
-              graft.ingest.IngestPipeline.BandIndexState(idxTab, -1L)))
-        }.resolve("out").toString
-        graft.ingest.IngestPipeline.audit(s, out)
-      },
+      (s, dir) => graft.ingest.IngestPipeline.audit(s,
+        probeLanding(s, dir, s"m12_ingest_$dir", "g_m12_seed_bandidx") {
+          (trained, out, idx) =>
+            val seed = s.read.parquet(MultimodalQueries.dhashFixturePath)
+              .filter(col("name").rlike("^scene_a"))
+              .select(col("name").as("item_id"),
+                graft.plans.DHashBmp(col("payload")).as("dh"))
+              .select(col("item_id"), col("dh.hi").as("hi"), col("dh.lo").as("lo"))
+            val corpus = graft.ingest.IngestPipeline.corpus(seed, out,
+              bands = 4, radius = 3)
+            (corpus, graft.ingest.IngestPipeline.stage(corpus, trained,
+              nShards = 4, graft.plans.DHashBmp(_), idx),
+              s.read.parquet(MultimodalQueries.xmodalFixturePath))
+        }),
       Some {
         import graft.functions.TextFns
         val xmodal = MultimodalQueries.xmodalFixturePath
@@ -668,38 +652,27 @@ object MarketQueries {
     // manifest stay oracle-exact. One fingerprint pass per distinct
     // asset; the oracle replays it per-sample in hex SQL.
     Q("m13_incremental_ingest_audio",
-      (s, dir) => {
-        val out = landingDir(s"m13_ingest_audio_$dir") { tmp =>
-          val trained = graft.ingest.IngestPipeline.train(
-            Tables(s, dir).documents, "doc_id", "text", "source",
-            targetSource = "src0", buckets = 512, driftThreshold = 20000.0)
-          val wavs = s.read.parquet(MultimodalQueries.audioFpFixturePath)
-          val seed = wavs.filter(col("name") === "fp_tone_a_44k")
-            .select(col("name").as("item_id"),
-              graft.plans.AudioFp(col("payload"), dstRate = 6000).as("fp"))
-            .select(col("item_id"), col("fp.hi").as("hi"), col("fp.lo").as("lo"))
-          val batch = wavs
-            .withColumn("pair_id", row_number().over(
-              org.apache.spark.sql.expressions.Window.orderBy("name")).cast("long"))
-            .select(col("pair_id"), col("name").as("img_name"), col("payload"),
-              concat(lit("audio transcript "), col("name")).as("caption"))
-          // probe path, like m12: seed-only bucketed band index (the
-          // audio seed is one fingerprint — the machinery is identical
-          // because admit is pure Hamming-space)
-          val idxTab = "g_m13_seed_bandidx"
-          LayoutQueries.ensureTable(s, idxTab)(
-            graft.ingest.IngestPipeline.buildIndex(s, seed,
-              tmp.resolve("out").toString, idxTab, nBuckets = 8, bands = 4,
-              through = -1L))
-          graft.ingest.IngestPipeline.ingestBatch(
-            batch, seed, trained, bands = 4, radius = 3, nShards = 4,
-            tmp.resolve("out").toString, batchId = 0L,
-            signature = graft.plans.AudioFp(_, dstRate = 6000),
-            admitIndex = () => Some(
-              graft.ingest.IngestPipeline.BandIndexState(idxTab, -1L)))
-        }.resolve("out").toString
-        graft.ingest.IngestPipeline.audit(s, out)
-      },
+      (s, dir) => graft.ingest.IngestPipeline.audit(s,
+        probeLanding(s, dir, s"m13_ingest_audio_$dir", "g_m13_seed_bandidx") {
+          (trained, out, idx) =>
+            val wavs = s.read.parquet(MultimodalQueries.audioFpFixturePath)
+            val seed = wavs.filter(col("name") === "fp_tone_a_44k")
+              .select(col("name").as("item_id"),
+                graft.plans.AudioFp(col("payload"), dstRate = 6000).as("fp"))
+              .select(col("item_id"), col("fp.hi").as("hi"), col("fp.lo").as("lo"))
+            val batch = wavs
+              .withColumn("pair_id", row_number().over(
+                org.apache.spark.sql.expressions.Window.orderBy("name")).cast("long"))
+              .select(col("pair_id"), col("name").as("img_name"), col("payload"),
+                concat(lit("audio transcript "), col("name")).as("caption"))
+            // the audio seed is one fingerprint — the machinery is
+            // identical because admit is pure Hamming-space
+            val corpus = graft.ingest.IngestPipeline.corpus(seed, out,
+              bands = 4, radius = 3)
+            (corpus, graft.ingest.IngestPipeline.stage(corpus, trained,
+              nShards = 4, graft.plans.AudioFp(_, dstRate = 6000), idx),
+              batch)
+        }),
       Some {
         import graft.functions.TextFns
         val afp = MultimodalQueries.audioFpFixturePath
@@ -826,46 +799,31 @@ object MarketQueries {
     // LANDED files; TextIngestStreamSpec proves the same DAG exactly-once
     // across a mid-stream kill/restart on the probe path.
     Q("m14_incremental_ingest_text",
-      (s, dir) => {
-        val out = landingDir(s"m14_ingest_text_$dir") { tmp =>
-          val docs = Tables(s, dir).documents
-          val trained = graft.ingest.IngestPipeline.train(
-            docs, "doc_id", "text", "source",
-            targetSource = "src0", buckets = 512, driftThreshold = 20000.0)
-          val seed = docs.filter(col("doc_id") % 5 =!= 0)
-            .select(col("doc_id"), col("text"))
-          val batch = docs.as("b")
-            .filter(col("b.doc_id") % 5 === 0)
-            .join(docs.select(col("doc_id").as("cid"), col("text").as("ctext")),
-              col("b.doc_id") + 1 === col("cid"), "left")
-            .join(docs.select(col("doc_id").as("pid"), col("text").as("ptext")),
-              col("b.doc_id") - 5 === col("pid"), "left")
-            .select((col("b.doc_id") + 1000000L).as("doc_id"),
-              when(col("b.doc_id") % 20 === 0, coalesce(col("ctext"), col("b.text")))
-                .when(col("b.doc_id") % 20 === 10, coalesce(col("ptext"), col("b.text")))
-                .when(col("b.doc_id") % 40 === 15, lit("too short doc"))
-                .when(col("b.doc_id") % 40 === 35,
-                  repeat(concat(col("b.text"), lit(" ")), 60))
-                .otherwise(col("b.text")).as("text"))
-          // the DECLARED query runs the PROBE path (the 100 TB shape):
-          // admit joins the persisted bucketed seed band index, not a
-          // per-batch re-signature of the corpus. Seed-only index
-          // (through = -1), a pure function of the documents table.
-          val idxTab = s"g_m14_seed_textidx_${LayoutQueries.tag(dir)}"
-          val outP = tmp.resolve("out").toString
-          LayoutQueries.ensureTable(s, idxTab)(
-            graft.ingest.TextIngestPipeline.buildIndex(s, seed, outP,
-              idxTab, nBuckets = 8, n = 3, numHashes = 12, rowsPerBand = 3,
-              through = -1L))
-          graft.ingest.TextIngestPipeline.ingestBatch(
-            batch, seed, trained, n = 3, numHashes = 12, rowsPerBand = 3,
-            threshold = 0.8, minTokens = 5L, maxTokens = 400L, nShards = 4,
-            outP, batchId = 0L,
-            admitIndex = () => Some(
-              graft.ingest.TextIngestPipeline.TextIndexState(idxTab, -1L)))
-        }.resolve("out").toString
-        graft.ingest.TextIngestPipeline.audit(s, out)
-      },
+      (s, dir) => graft.ingest.TextIngestPipeline.audit(s,
+        probeLanding(s, dir, s"m14_ingest_text_$dir",
+            s"g_m14_seed_textidx_${LayoutQueries.tag(dir)}") {
+          (trained, out, idx) =>
+            val docs = Tables(s, dir).documents
+            val seed = docs.filter(col("doc_id") % 5 =!= 0)
+              .select(col("doc_id"), col("text"))
+            val batch = docs.as("b")
+              .filter(col("b.doc_id") % 5 === 0)
+              .join(docs.select(col("doc_id").as("cid"), col("text").as("ctext")),
+                col("b.doc_id") + 1 === col("cid"), "left")
+              .join(docs.select(col("doc_id").as("pid"), col("text").as("ptext")),
+                col("b.doc_id") - 5 === col("pid"), "left")
+              .select((col("b.doc_id") + 1000000L).as("doc_id"),
+                when(col("b.doc_id") % 20 === 0, coalesce(col("ctext"), col("b.text")))
+                  .when(col("b.doc_id") % 20 === 10, coalesce(col("ptext"), col("b.text")))
+                  .when(col("b.doc_id") % 40 === 15, lit("too short doc"))
+                  .when(col("b.doc_id") % 40 === 35,
+                    repeat(concat(col("b.text"), lit(" ")), 60))
+                  .otherwise(col("b.text")).as("text"))
+            val corpus = graft.ingest.TextIngestPipeline.corpus(seed, out,
+              n = 3, numHashes = 12, rowsPerBand = 3, threshold = 0.8)
+            (corpus, graft.ingest.TextIngestPipeline.stage(corpus, trained,
+              minTokens = 5L, maxTokens = 400L, nShards = 4, idx), batch)
+        }),
       Some {
         import graft.functions.TextFns
         val buckets = 512
@@ -1072,6 +1030,34 @@ object MarketQueries {
       },
       Some(M15Sql.m16Audit)),
   )
+
+  /** m12/m13/m14's shared landed artifact: ONE batch through a
+    * band-index pipeline on the PROBE path (the 100 TB shape — admit
+    * joins the persisted bucketed seed band index, not a per-batch
+    * re-shuffle of the corpus; identical oracle — the two corpus sides
+    * are equal by the d29/d31 proofs). DSIR is trained on the sf
+    * documents; the seed-only index (through = -1) is a pure function of
+    * the inputs, so it is built once per session. `define` gets (trained, out dir, index
+    * thunk) and returns the pipeline's corpus, stage and batch 0. Returns
+    * the out dir the pipeline's audit reads.
+    */
+  private def probeLanding(s: org.apache.spark.sql.SparkSession, dir: String,
+      key: String, idxTab: String)(
+      define: (graft.ingest.Frame.Trained, String,
+        () => Option[graft.ingest.Frame.IndexState]) =>
+        (graft.ingest.Frame.Corpus, graft.ingest.Frame.Stage,
+          org.apache.spark.sql.DataFrame)): String =
+    landingDir(key) { tmp =>
+      val out = tmp.resolve("out").toString
+      val trained = graft.ingest.Frame.train(Tables(s, dir).documents,
+        "doc_id", "text", "source", targetSource = "src0", buckets = 512,
+        driftThreshold = 20000.0)
+      val (corpus, stage, batch) = define(trained, out,
+        () => Some(graft.ingest.Frame.IndexState(idxTab, -1L)))
+      LayoutQueries.ensureTable(s, idxTab)(
+        corpus.buildIndex(idxTab, nBuckets = 8, through = -1L))
+      graft.ingest.Frame.ingestBatch(stage, batch, batchId = 0L)
+    }.resolve("out").toString
 
   /** m15/m16's shared landed artifact: ONE embedding ingest batch driven
     * through the full m15 DAG (bootstrap index + ingestBatch 0) over the

@@ -219,11 +219,10 @@ object EventStreams {
         // was written but not checkpoint-committed (crash between the two)
         // re-delivers on restart and overwrites its own partition instead of
         // appending duplicates — plain append would only be at-least-once.
-        batch.sparkSession.conf
-          .set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         batch
           .withColumn("batch_id", lit(batchId))
           .write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
           .partitionBy("ingest_date", "batch_id")
           .parquet(outDir)
       }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.ingest.EmbIngestPipeline
+import graft.ingest.{EmbIngestPipeline, Frame}
 import graft.ingest.EmbIngestPipeline.Params
 import graft.operators.{AnnIndex, Similarity}
 
@@ -157,9 +157,8 @@ object EmbIngestScaleBench {
       val stageNames = Seq("decide", "admit", "append", "monitor")
       val stageSecs = files.toSeq.zipWithIndex.map { case (f, b) =>
         val m = scala.collection.mutable.LinkedHashMap[String, Double]()
-        EmbIngestPipeline.ingestBatch(
-          spark.read.schema(schema).parquet(f.toString), seed, p, out2,
-          b.toLong, () => idx2,
+        Frame.ingestBatch(EmbIngestPipeline.stage(seed, p, out2, idx2),
+          spark.read.schema(schema).parquet(f.toString), b.toLong,
           timer = (name, fn) => {
             val s0 = System.nanoTime()
             fn()

@@ -5,7 +5,7 @@ import java.util.SplittableRandom
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ingest.IngestPipeline
+import graft.ingest.{Frame, IngestPipeline}
 
 /** The INGEST-LOOP shape at corpus scale: round 9 measured the d29 probe
   * flat at the OPERATOR level; this measures the m12 PIPELINE — the whole
@@ -75,7 +75,7 @@ object IngestScaleBench {
     val docs = (0L until 40L).map(i =>
       (i, s"w${i % 7} w${(i * 3) % 11} w${(i * 5) % 13} common words here",
         s"src${i % 2}")).toDF("doc_id", "text", "source")
-    val trained = IngestPipeline.train(docs, "doc_id", "text", "source",
+    val trained = Frame.train(docs, "doc_id", "text", "source",
       targetSource = "src0", buckets = 64, driftThreshold = 1e12)
 
     def r3(v: Double) = math.rint(v * 1000) / 1000
@@ -116,7 +116,7 @@ object IngestScaleBench {
       }
 
       def runPath(tag: String,
-          admitIndex: () => Option[IngestPipeline.BandIndexState]): Seq[Double] = {
+          admitIndex: () => Option[Frame.IndexState]): Seq[Double] = {
         val out = java.nio.file.Files.createTempDirectory(
           java.nio.file.Paths.get("target"), s"ingscale_${tag}_$n").toString
         val ckpt = java.nio.file.Files.createTempDirectory(
@@ -133,20 +133,13 @@ object IngestScaleBench {
       }
 
       // probe path: bucketed seed index built once, untimed (the
-      // amortized bootstrap); watermark -1 so the admitted tail rides
-      // along exactly as a between-compactions loop would
+      // amortized bootstrap; through = -1 reads nothing from the corpus's
+      // out dir); watermark -1 so the admitted tail rides along exactly as
+      // a between-compactions loop would
       val tab = s"g_ingscale_idx_$n"
-      spark.sql(s"DROP TABLE IF EXISTS $tab")
-      val wh = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir"), tab)
-      val whFs = wh.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (whFs.exists(wh)) whFs.delete(wh, true)
-      graft.util.Layout.writeBucketed(
-        graft.operators.Dedup.bandIndex64(seed, "item_id", "hi", "lo", 4)
-          .repartition(64, col("bk")),
-        tab, "bk", 64, Some("bk"))
-      val probe = runPath("probe",
-        () => Some(IngestPipeline.BandIndexState(tab, -1L)))
+      val st = IngestPipeline.corpus(seed, s"target/ingscale_idxout_$n",
+        bands = 4, radius = 3).buildIndex(tab, nBuckets = 64, through = -1L)
+      val probe = runPath("probe", () => Some(st))
       val direct = runPath("direct", () => None)
       println(s"""{"metric":"ingest_scale","corpus":$n,"batch_rows":$batchRows,""" +
         s""""n_batches":${direct.size},""" +

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ingest.{EmbIngestPipeline, IngestPipeline, TextIngestPipeline}
+import graft.ingest.{EmbIngestPipeline, Frame, TextIngestPipeline}
 import graft.operators.{AnnIndex, Similarity}
 
 /** The m14/m15 ingest LOOPS driven over REAL data shapes — the generated
@@ -66,7 +66,7 @@ object LoopSf1Bench {
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val nDocs = docs.count()
-      val trained = IngestPipeline.train(docs, "doc_id", "text", "source",
+      val trained = Frame.train(docs, "doc_id", "text", "source",
         targetSource = "src0", buckets = 512, driftThreshold = 20000.0)
       val seed = docs.filter(col("doc_id") % 5 =!= 0)
         .select(col("doc_id"), col("text"))
@@ -76,7 +76,7 @@ object LoopSf1Bench {
 
       // m14 parameters; the PROBE path rides the persisted seed band index
       def run(label: String,
-          admitIndex: () => Option[TextIngestPipeline.TextIndexState]): Seq[Double] = {
+          admitIndex: () => Option[Frame.IndexState]): Seq[Double] = {
         val out = tmp(s"loopsf_text_out_$label")
         drive(TextIngestPipeline.stream(spark, src, seed, trained,
           n = 3, numHashes = 12, rowsPerBand = 3, threshold = 0.8,
@@ -84,9 +84,9 @@ object LoopSf1Bench {
           tmp(s"loopsf_text_ck_$label"), out, admitIndex))
       }
       val idxTab = "g_loopsf_textidx"
-      val st = TextIngestPipeline.buildIndex(spark, seed,
-        tmp("loopsf_text_idxout"), idxTab, nBuckets = 8, n = 3,
-        numHashes = 12, rowsPerBand = 3, through = -1L)
+      val st = TextIngestPipeline.corpus(seed, tmp("loopsf_text_idxout"),
+          n = 3, numHashes = 12, rowsPerBand = 3, threshold = 0.8)
+        .buildIndex(idxTab, nBuckets = 8, through = -1L)
       val probe = run("probe", () => Some(st))
       val direct = run("direct", () => None)
       println(s"""{"metric":"text_loop_realdata","sf_dir":"$sfDir",""" +

@@ -102,25 +102,13 @@ object Layout {
       // or a table format's rewrite commit; in-place is fine for a
       // single-cluster utility.
       .localCheckpoint(true)
-    // dynamic overwrite only for THIS write — restore the session's prior
-    // setting so later mode(Overwrite).partitionBy writes keep their
-    // static-overwrite semantics
-    val modeKey = "spark.sql.sources.partitionOverwriteMode"
-    val prevMode = spark.conf.getOption(modeKey)
-    spark.conf.set(modeKey, "dynamic")
-    try {
-      salted
-        .repartition((parts :+ col("_salt")): _*)
-        .drop("_files", "_salt")
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy(partitionCols: _*)
-        .parquet(root)
-    } finally {
-      prevMode match {
-        case Some(v) => spark.conf.set(modeKey, v)
-        case None => spark.conf.unset(modeKey)
-      }
-    }
+    salted
+      .repartition((parts :+ col("_salt")): _*)
+      .drop("_files", "_salt")
+      .write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partitionCols: _*)
+      .parquet(root)
     dataFiles(new Path(root)).size.toLong
   }
 }

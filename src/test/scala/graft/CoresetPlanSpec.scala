@@ -36,16 +36,8 @@ class CoresetPlanSpec extends SparkSpec {
       // attributed to the operator
       val got = Coreset.kCenterSample(df, "id", "vec", dim = 16, k = 6)
       assert(got.collect().length == 6)
-      // drain listener events before asserting (bus delivery is async and
-      // waitUntilEmpty is private[spark]): wait until the seen-stage set is
-      // stable for a full second, bounded at 15 s
-      var last = -1
-      var stable = 0
-      var waited = 0
-      while (stable < 5 && waited < 15000) {
-        Thread.sleep(200); waited += 200
-        if (shuffleBytes.size == last) stable += 1 else { stable = 0; last = shuffleBytes.size }
-      }
+      // bus delivery is async: drain it before asserting
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
       assert(shuffleBytes.nonEmpty, "listener saw no stages")
       val total = shuffleBytes.values.sum
       assert(total == 0L,

@@ -149,6 +149,15 @@ class EmbIngestStreamSpec extends SparkSpec {
     assert(auditRows(outA, idxA) == auditRows(outB, idxB),
       "kill/restart must land byte-identical audit rows")
     assert(auditRows(outA, idxA).nonEmpty)
+    // killed between batch 1's rejected and admitted landings instead
+    val outC = tmpDir("eingest_outC")
+    val idxC = newIndex("eingest_idxC", outC, p, -1L)
+    killBetweenLandings(src, "vec_id BIGINT, embedding ARRAY<FLOAT>",
+      tmpDir("eingest_ckptC"), outC) {
+      EmbIngestPipeline.stage(seedVecs(), p, outC, idxC)
+    }
+    assert(auditRows(outC, idxC) == auditRows(outB, idxB),
+      "a replay after a kill between the landings must land identical rows")
   }
 
   test("drift-fire -> rebuild -> recovery: the full maintenance loop in-stream") {

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.ingest.IngestPipeline
+import graft.ingest.{Frame, IngestPipeline}
 import graft.tools.GenXModalFixtures
 
 /** The m12 pipeline as a STREAM with a mid-stream kill/restart: the
@@ -17,12 +17,12 @@ import graft.tools.GenXModalFixtures
   */
 class IngestStreamSpec extends SparkSpec {
 
-  private def trained(): IngestPipeline.Trained = {
+  private def trained(): Frame.Trained = {
     import spark.implicits._
     val docs = (0L until 40L).map(i =>
       (i, s"w${i % 7} w${(i * 3) % 11} w${(i * 5) % 13} common words here",
         s"src${i % 2}")).toDF("doc_id", "text", "source")
-    IngestPipeline.train(docs, "doc_id", "text", "source",
+    Frame.train(docs, "doc_id", "text", "source",
       targetSource = "src0", buckets = 64, driftThreshold = 1e12)
   }
 
@@ -53,7 +53,7 @@ class IngestStreamSpec extends SparkSpec {
     */
   private def runStream(src: String, ckpt: String, out: String,
       killInBatch: Option[Int],
-      admitIndex: () => Option[IngestPipeline.BandIndexState] =
+      admitIndex: () => Option[Frame.IndexState] =
         () => None): Unit = {
     val kt = killingThunk(killInBatch.map(_ + 1), admitIndex)
     val q = IngestPipeline.stream(spark, src, seedSig(), trained(),
@@ -160,6 +160,17 @@ class IngestStreamSpec extends SparkSpec {
     assert(auditRows(outA) == auditRows(outB),
       "kill/restart must land byte-identical audit rows")
     assert(auditRows(outA).nonEmpty)
+    // killed between batch 1's rejected and admitted landings instead
+    val outC = tmpDir("ingest_outC")
+    killBetweenLandings(src,
+      "pair_id BIGINT, img_name STRING, payload BINARY, caption STRING",
+      tmpDir("ingest_ckptC"), outC) {
+      IngestPipeline.stage(
+        IngestPipeline.corpus(seedSig(), outC, bands = 4, radius = 3),
+        trained(), nShards = 4, graft.plans.DHashBmp(_), () => None)
+    }
+    assert(auditRows(outC) == auditRows(outB),
+      "a replay after a kill between the landings must land identical rows")
   }
 
   test("probe path + mid-stream fold-in compaction equals the direct path") {
@@ -176,11 +187,12 @@ class IngestStreamSpec extends SparkSpec {
     // lives ONLY in the compacted index (tail is empty past watermark 1).
     val out = tmpDir("ingest_probe_out")
     val ckpt = tmpDir("ingest_probe_ck")
-    var state = IngestPipeline.buildIndex(spark, seedSig(), out,
-      "g_ingestspec_idx_v0", nBuckets = 4, bands = 4, through = -1L)
+    val corpus = IngestPipeline.corpus(seedSig(), out, bands = 4, radius = 3)
+    var state = corpus.buildIndex("g_ingestspec_idx_v0", nBuckets = 4,
+      through = -1L)
     runStream(src, ckpt, out, Some(2), () => Some(state))
-    state = IngestPipeline.compactIndex(spark, state, out,
-      "g_ingestspec_idx_v1", nBuckets = 4, bands = 4, newThrough = 1L)
+    state = corpus.compactIndex(state, "g_ingestspec_idx_v1", nBuckets = 4,
+      newThrough = 1L)
     runStream(src, ckpt, out, None, () => Some(state))
     assert(auditRows(out) == ref,
       "probe path with fold-in compaction must land the direct path's rows")
@@ -206,13 +218,14 @@ class IngestStreamSpec extends SparkSpec {
 
     val out = tmpDir("ingest_race_out")
     val ckpt = tmpDir("ingest_race_ck")
-    var state = IngestPipeline.buildIndex(spark, seedSig(), out,
-      "g_ingestspec_race_v0", nBuckets = 4, bands = 4, through = -1L)
+    val corpus = IngestPipeline.corpus(seedSig(), out, bands = 4, radius = 3)
+    var state = corpus.buildIndex("g_ingestspec_race_v0", nBuckets = 4,
+      through = -1L)
     runStream(src, ckpt, out, Some(2), () => Some(state))
-    val compacted = IngestPipeline.compactIndex(spark, state, out,
-      "g_ingestspec_race_v1", nBuckets = 4, bands = 4, newThrough = 1L)
+    val compacted = corpus.compactIndex(state, "g_ingestspec_race_v1",
+      nBuckets = 4, newThrough = 1L)
     // stale watermark: new table, OLD watermark — maximal overlap
-    state = IngestPipeline.BandIndexState(compacted.table, -1L)
+    state = Frame.IndexState(compacted.table, -1L)
     runStream(src, ckpt, out, None, () => Some(state))
     assert(auditRows(out) == ref,
       "index/tail overlap after a compaction race must collapse, not dup")
@@ -221,12 +234,12 @@ class IngestStreamSpec extends SparkSpec {
   test("the probe path's corpus index scans bucket-aligned, no corpus-side exchange") {
     import spark.implicits._
     val out = tmpDir("ingest_plan_out")
-    val state = IngestPipeline.buildIndex(spark, seedSig(), out,
-      "g_ingestspec_plan_idx", nBuckets = 4, bands = 4, through = -1L)
+    val corpus = IngestPipeline.corpus(seedSig(), out, bands = 4, radius = 3)
+    val state = corpus.buildIndex("g_ingestspec_plan_idx", nBuckets = 4,
+      through = -1L)
     val reps = Seq(("7", 0x12345678L, 0x0abcdef0L))
       .toDF("item_id", "hi", "lo")
-    val pairs = IngestPipeline.admitPairs(spark, seedSig(), reps, out,
-      batchId = 5L, bands = 4, radius = 3, Some(state))
+    val pairs = corpus.admitPairs(reps, batchId = 5L, Some(state))
     pairs.count() // settle AQE
     val plan = pairs.queryExecution.executedPlan.toString
     assert(plan.contains("Bucketed: true"),

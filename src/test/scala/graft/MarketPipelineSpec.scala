@@ -117,6 +117,24 @@ class MarketPipelineSpec extends SparkSpec {
     assert(readRaw(spark, root).select("commodity").distinct().count() == 2)
   }
 
+  test("writeRaw leaves the session's partition overwrite mode alone") {
+    import spark.implicits._
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.unset(key) // the session default: static
+    val before = spark.conf.get(key)
+    writeRaw(ingestOne("apples"), tmpDir("raw_conf"))
+    assert(spark.conf.get(key) == before)
+    // a static partitioned overwrite in the same session still replaces
+    // the whole table, stale partitions included
+    val root = tmpDir("static_after_raw")
+    Seq((1, "a"), (2, "b")).toDF("v", "p")
+      .write.mode("overwrite").partitionBy("p").parquet(root)
+    Seq((3, "a")).toDF("v", "p")
+      .write.mode("overwrite").partitionBy("p").parquet(root)
+    assert(spark.read.parquet(root).select("p").distinct()
+      .collect().map(_.getString(0)).toSet == Set("a"))
+  }
+
   test("partition pruning reaches the raw-layer scan") {
     val root = tmpDir("prune_raw")
     writeRaw(ingestOne("apples"), root)

@@ -31,6 +31,19 @@ trait SparkSpec extends AnyFunSuite {
     */
   final class InjectedKill extends RuntimeException("injected mid-stream kill")
 
+  /** Counts calls to [[tick]]; the `killOnCall`-th throws
+    * [[InjectedKill]], ONCE, and [[killed]] records that it fired.
+    */
+  class Kill(killOnCall: Option[Int]) {
+    private val calls = new java.util.concurrent.atomic.AtomicInteger(0)
+    private val killedFlag = new java.util.concurrent.atomic.AtomicBoolean(false)
+    def killed: Boolean = killedFlag.get
+    protected def tick(): Unit =
+      if (killOnCall.contains(calls.incrementAndGet()) &&
+          killedFlag.compareAndSet(false, true))
+        throw new InjectedKill
+  }
+
   /** DETERMINISTIC mid-stream kill for the ingest-pipeline stream specs:
     * wraps a per-batch thunk (the index/state resolver every pipeline
     * invokes inside foreachBatch) so its `killOnCall`-th invocation
@@ -48,15 +61,21 @@ trait SparkSpec extends AnyFunSuite {
     * corpus_dup into a batch_dup).
     */
   final class KillingThunk[T](killOnCall: Option[Int], underlying: () => T)
-      extends (() => T) {
-    private val calls = new java.util.concurrent.atomic.AtomicInteger(0)
-    private val killedFlag = new java.util.concurrent.atomic.AtomicBoolean(false)
-    def killed: Boolean = killedFlag.get
-    def apply(): T = {
-      if (killOnCall.contains(calls.incrementAndGet()) &&
-          killedFlag.compareAndSet(false, true))
-        throw new InjectedKill
-      underlying()
+      extends Kill(killOnCall) with (() => T) {
+    def apply(): T = { tick(); underlying() }
+  }
+
+  /** A [[graft.ingest.Frame.ingestBatch]] timer that dies as step `step`
+    * starts for the `killOnCall`-th time — e.g. `step = "admit"` kills a
+    * batch AFTER its rejected landing and BEFORE its admitted one, a
+    * window the index-thunk kill (which fires before anything lands)
+    * never reaches.
+    */
+  final class KillingTimer(killOnCall: Option[Int], step: String)
+      extends Kill(killOnCall) with ((String, () => Unit) => Unit) {
+    def apply(name: String, f: () => Unit): Unit = {
+      if (name == step) tick()
+      f()
     }
   }
 
@@ -65,12 +84,12 @@ trait SparkSpec extends AnyFunSuite {
 
   /** Drive a stream to completion, or let the injected kill take it down
     * (`expectKill`) — the companion of [[killingThunk]]. Pass the thunk
-    * as `kill` on kill runs: only the InjectedKill it throws is
+    * (or timer) as `kill` on kill runs: only the InjectedKill it throws is
     * swallowed, and the run asserts the kill actually fired.
     */
   def driveStream(q: org.apache.spark.sql.streaming.StreamingQuery,
       expectKill: Boolean,
-      kill: Option[KillingThunk[_]] = None): Unit =
+      kill: Option[Kill] = None): Unit =
     if (expectKill) {
       def injected(t: Throwable): Boolean =
         t != null && (t.isInstanceOf[InjectedKill] || injected(t.getCause))
@@ -88,4 +107,25 @@ trait SparkSpec extends AnyFunSuite {
       q.processAllAvailable()
       q.stop(); q.awaitTermination()
     }
+
+  /** Stream `srcDir` through the shared ingest skeleton with `stage`
+    * (re-built per micro-batch), killing micro-batch 1 AFTER its rejected
+    * landing and BEFORE its admitted one, then restart to completion: the
+    * checkpoint replays batch 1 under the same id. Asserts the kill landed
+    * in that window.
+    */
+  def killBetweenLandings(srcDir: String, schema: String, ckpt: String,
+      outDir: String)(stage: => graft.ingest.Frame.Stage): Unit = {
+    def run(timer: (String, () => Unit) => Unit, kill: Option[Kill]): Unit =
+      driveStream(graft.ingest.Frame.fileStream(spark, srcDir, schema, ckpt) {
+        (b, id) => graft.ingest.Frame.ingestBatch(stage, b, id, timer)
+      }, expectKill = kill.isDefined, kill = kill)
+    val kill = new KillingTimer(Some(2), "admit")
+    run(kill, Some(kill))
+    def landed(sub: String) = spark.read.parquet(s"$outDir/$sub")
+      .filter(org.apache.spark.sql.functions.col("ingest_batch") === 1).count()
+    assert(landed("rejected") > 0 && landed("admitted") == 0,
+      "the kill must fall between batch 1's rejected and admitted landings")
+    run((_, f) => f(), None)
+  }
 }

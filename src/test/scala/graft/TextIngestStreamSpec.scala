@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.ingest.{IngestPipeline, TextIngestPipeline}
+import graft.ingest.{Frame, TextIngestPipeline}
 
 /** The m14 TEXT pipeline as a STREAM with a mid-stream kill/restart —
   * the text twin of IngestStreamSpec: the checkpoint replays the
@@ -25,12 +25,12 @@ class TextIngestStreamSpec extends SparkSpec {
     "final standalone entry covering cold storage logistics costs"
   private val LongText = (1 to 40).map(i => s"filler$i").mkString(" ")
 
-  private def trained(): IngestPipeline.Trained = {
+  private def trained(): Frame.Trained = {
     import spark.implicits._
     val docs = (0L until 40L).map(i =>
       (i, s"w${i % 7} w${(i * 3) % 11} w${(i * 5) % 13} common words here",
         s"src${i % 2}")).toDF("doc_id", "text", "source")
-    IngestPipeline.train(docs, "doc_id", "text", "source",
+    Frame.train(docs, "doc_id", "text", "source",
       targetSource = "src0", buckets = 64, driftThreshold = 1e12)
   }
 
@@ -40,6 +40,10 @@ class TextIngestStreamSpec extends SparkSpec {
       i -> s"seed doc $i carries its own distinct vocabulary v${i}a v${i}b v${i}c"))
       .toDF("doc_id", "text")
   }
+
+  private def textCorpus(out: String): Frame.Corpus =
+    TextIngestPipeline.corpus(seedDocs(), out, n = 3, numHashes = 12,
+      rowsPerBand = 3, threshold = 0.8)
 
   /** 9 docs in 3 mtime-ordered micro-batches; every decision path hit. */
   private def writeSource(src: String): Unit = {
@@ -61,7 +65,7 @@ class TextIngestStreamSpec extends SparkSpec {
     */
   private def runStream(src: String, ckpt: String, out: String,
       killInBatch: Option[Int],
-      admitIndex: () => Option[TextIngestPipeline.TextIndexState] =
+      admitIndex: () => Option[Frame.IndexState] =
         () => None): Unit = {
     val kt = killingThunk(killInBatch.map(_ + 1), admitIndex)
     val q = TextIngestPipeline.stream(spark, src, seedDocs(), trained(),
@@ -132,6 +136,15 @@ class TextIngestStreamSpec extends SparkSpec {
     assert(auditRows(outA) == auditRows(outB),
       "kill/restart must land byte-identical audit rows")
     assert(auditRows(outA).nonEmpty)
+    // killed between batch 1's rejected and admitted landings instead
+    val outC = tmpDir("tingest_outC")
+    killBetweenLandings(src, "doc_id BIGINT, text STRING",
+      tmpDir("tingest_ckptC"), outC) {
+      TextIngestPipeline.stage(textCorpus(outC), trained(), minTokens = 5L,
+        maxTokens = 30L, nShards = 4, () => None)
+    }
+    assert(auditRows(outC) == auditRows(outB),
+      "a replay after a kill between the landings must land identical rows")
   }
 
   test("text probe path + mid-stream fold-in compaction equals the direct path") {
@@ -148,13 +161,12 @@ class TextIngestStreamSpec extends SparkSpec {
     // ONLY in the compacted index (the tail is empty past watermark 1).
     val out = tmpDir("tingest_probe_out")
     val ckpt = tmpDir("tingest_probe_ck")
-    var state = TextIngestPipeline.buildIndex(spark, seedDocs(), out,
-      "g_tingestspec_idx_v0", nBuckets = 4, n = 3, numHashes = 12,
-      rowsPerBand = 3, through = -1L)
+    val corpus = textCorpus(out)
+    var state = corpus.buildIndex("g_tingestspec_idx_v0", nBuckets = 4,
+      through = -1L)
     runStream(src, ckpt, out, Some(2), () => Some(state))
-    state = TextIngestPipeline.compactIndex(spark, state, out,
-      "g_tingestspec_idx_v1", nBuckets = 4, n = 3, numHashes = 12,
-      rowsPerBand = 3, newThrough = 1L)
+    state = corpus.compactIndex(state, "g_tingestspec_idx_v1", nBuckets = 4,
+      newThrough = 1L)
     runStream(src, ckpt, out, None, () => Some(state))
     assert(auditRows(out) == ref,
       "probe path with fold-in compaction must land the direct path's rows")
@@ -175,15 +187,14 @@ class TextIngestStreamSpec extends SparkSpec {
 
     val out = tmpDir("tingest_race_out")
     val ckpt = tmpDir("tingest_race_ck")
-    var state = TextIngestPipeline.buildIndex(spark, seedDocs(), out,
-      "g_tingestspec_race_v0", nBuckets = 4, n = 3, numHashes = 12,
-      rowsPerBand = 3, through = -1L)
+    val corpus = textCorpus(out)
+    var state = corpus.buildIndex("g_tingestspec_race_v0", nBuckets = 4,
+      through = -1L)
     runStream(src, ckpt, out, Some(2), () => Some(state))
-    val compacted = TextIngestPipeline.compactIndex(spark, state, out,
-      "g_tingestspec_race_v1", nBuckets = 4, n = 3, numHashes = 12,
-      rowsPerBand = 3, newThrough = 1L)
+    val compacted = corpus.compactIndex(state, "g_tingestspec_race_v1",
+      nBuckets = 4, newThrough = 1L)
     // stale watermark: new table, OLD watermark — maximal overlap
-    state = TextIngestPipeline.TextIndexState(compacted.table, -1L)
+    state = Frame.IndexState(compacted.table, -1L)
     runStream(src, ckpt, out, None, () => Some(state))
     assert(auditRows(out) == ref,
       "index/tail overlap after a compaction race must collapse, not dup")
@@ -192,17 +203,15 @@ class TextIngestStreamSpec extends SparkSpec {
   test("the text probe's corpus index scans bucket-aligned, no corpus-side exchange") {
     import spark.implicits._
     val out = tmpDir("tingest_plan_out")
-    val state = TextIngestPipeline.buildIndex(spark, seedDocs(), out,
-      "g_tingestspec_plan_idx", nBuckets = 4, n = 3, numHashes = 12,
-      rowsPerBand = 3, through = -1L)
+    val corpus = textCorpus(out)
+    val state = corpus.buildIndex("g_tingestspec_plan_idx", nBuckets = 4,
+      through = -1L)
     val reps = Seq((7L, TextC)).toDF("doc_id", "text")
     // audit the un-checkpointed plan (materializeAndRelease otherwise
     // collapses the probe to a block scan)
     spark.conf.set("spark.graft.skipMaterialize", "true")
     try {
-      val pairs = TextIngestPipeline.admitPairs(spark, seedDocs(), reps, out,
-        batchId = 5L, n = 3, numHashes = 12, rowsPerBand = 3, threshold = 0.8,
-        Some(state))
+      val pairs = corpus.admitPairs(reps, batchId = 5L, Some(state))
       pairs.count() // settle AQE
       val plan = pairs.queryExecution.executedPlan.toString
       assert(plan.contains("Bucketed: true"),
