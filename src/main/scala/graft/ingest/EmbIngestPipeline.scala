@@ -154,8 +154,8 @@ object EmbIngestPipeline {
         // sample lands a fired=NULL row (the drift-gate allowEmpty rule:
         // a throw inside foreachBatch wedges the stream on replay).
         if (b.id % p.monitorEvery == 0) b.timer("monitor", () => {
-          val sample = landed(b).orderBy(col("vec_id")).limit(p.monitorMax)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          val sample = b.pin(
+            landed(b).orderBy(col("vec_id")).limit(p.monitorMax))
           val monitor =
             if (sample.count() == 0)
               b.spark.sql(s"""SELECT 'batch_${b.id}' AS batch,
@@ -186,7 +186,6 @@ object EmbIngestPipeline {
                   (col("mean_recall") < p.recallTarget).as("fired"))
             }
           b.land(monitor, "monitor", coalesceTo = Some(4))
-          sample.unpersist()
         })
       })
   }

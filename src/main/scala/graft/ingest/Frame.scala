@@ -2,16 +2,14 @@ package graft.ingest
 
 import java.math.{BigDecimal => JBigDecimal}
 
-import scala.collection.mutable.ArrayBuffer
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.storage.StorageLevel
 
 import graft.functions.TextFns
 import graft.operators.{Dedup, Dsir}
+import graft.util.Materialize
 
 /** The EXACTLY-ONCE incremental ingest skeleton: ONE per-batch DAG
   * ([[ingestBatch]]) that the three modality pipelines — image/audio
@@ -146,7 +144,8 @@ object Frame {
       afterLanding: Batch => Unit)
 
   /** One micro-batch as a [[Stage]]'s functions see it. `pin` persists a
-    * relation until the batch is released; `timer` brackets a named step.
+    * relation in the batch's `util.Materialize` scope, released when the
+    * batch ends; `timer` brackets a named step.
     */
   final case class Batch(spark: SparkSession, id: Long, outDir: String,
       gated: DataFrame, pin: DataFrame => DataFrame,
@@ -165,52 +164,46 @@ object Frame {
     * dominant per-batch term; the default is a no-op passthrough.
     */
   def ingestBatch(stage: Stage, batch: DataFrame, batchId: Long,
-      timer: (String, () => Unit) => Unit = (_, f) => f()): Unit = {
+      timer: (String, () => Unit) => Unit = (_, f) => f()): Unit =
+      Materialize { m =>
     val spark = batch.sparkSession
-    val pinned = ArrayBuffer.empty[DataFrame]
-    def pin(df: DataFrame): DataFrame = {
-      pinned += df
-      df.persist(StorageLevel.MEMORY_AND_DISK)
-    }
     val id = col(stage.idCol)
-    try {
-      // a micro-batch arrives as ONE source file (1-2 splits): the per-row
-      // gate and the intra-batch dedup would run at that parallelism.
-      // Spread to the session's shuffle width first (hash on the unique
-      // id: deterministic; explicit count so AQE can't coalesce the small
-      // exchange back down).
-      val gated = pin(stage.gate(batch.repartition(
-        spark.conf.get("spark.sql.shuffle.partitions").toInt, id)))
-      val b = Batch(spark, batchId, stage.outDir, gated, pin, timer)
-      val surv = gated.filter(col("gate_reason").isNull)
-        .select(stage.carried.map(col): _*)
-      // intra-batch components; the min id represents each component
-      val comp = Dedup.connectedComponents(
-        stage.pairs(surv).select(col("id_a"), col("id_b")))
-      val withRep = withRepresentative(surv, stage.idCol, comp)
-      val corpusDup = stage.admit(b, withRep.filter(id === col("rep")))
-      val extra = corpusDup.schema.fields
-        .filterNot(f => f.name == "rep" || f.name == "corpus_dup_of")
-      val carried = stage.carried.map(col)
-      val decided = pin(withRep.join(corpusDup, Seq("rep"), "left")
-        .select(carried ++ (rejectReason(stage.idCol).as("reject_reason") +:
-          extra.map(f => when(id === col("rep"), col(f.name)).as(f.name))): _*)
-        .unionByName(gated.filter(col("gate_reason").isNotNull)
-          .select(carried ++ (col("gate_reason").as("reject_reason") +:
-            extra.map(f => lit(null).cast(f.dataType).as(f.name))): _*)))
-      // REJECTED lands FIRST, deliberately: decided's plan READS
-      // $outDir/admitted (the corpus side of the admit), so the admitted
-      // write invalidates its cache entry (Spark recaches by path) —
-      // admitted-first would recompute the whole gate → dedup → admit
-      // chain for the rejected landing, every batch.
-      timer("decide", () => b.land(decided.filter(col("reject_reason").isNotNull)
-        .select(landedCols(stage.rejectedSchema): _*),
-        "rejected", coalesceTo = Some(4)))
-      timer("admit", () => b.land(
-        stage.admitted(b, decided.filter(col("reject_reason").isNull)),
-        "admitted", stage.admittedParts))
-      stage.afterLanding(b)
-    } finally pinned.foreach(_.unpersist())
+    // a micro-batch arrives as ONE source file (1-2 splits): the per-row
+    // gate and the intra-batch dedup would run at that parallelism.
+    // Spread to the session's shuffle width first (hash on the unique
+    // id: deterministic; explicit count so AQE can't coalesce the small
+    // exchange back down).
+    val gated = m.persist(stage.gate(batch.repartition(
+      spark.conf.get("spark.sql.shuffle.partitions").toInt, id)))
+    val b = Batch(spark, batchId, stage.outDir, gated, m.persist, timer)
+    val surv = gated.filter(col("gate_reason").isNull)
+      .select(stage.carried.map(col): _*)
+    // intra-batch components; the min id represents each component
+    val comp = Dedup.connectedComponents(
+      stage.pairs(surv).select(col("id_a"), col("id_b")))
+    val withRep = withRepresentative(surv, stage.idCol, comp)
+    val corpusDup = stage.admit(b, withRep.filter(id === col("rep")))
+    val extra = corpusDup.schema.fields
+      .filterNot(f => f.name == "rep" || f.name == "corpus_dup_of")
+    val carried = stage.carried.map(col)
+    val decided = m.persist(withRep.join(corpusDup, Seq("rep"), "left")
+      .select(carried ++ (rejectReason(stage.idCol).as("reject_reason") +:
+        extra.map(f => when(id === col("rep"), col(f.name)).as(f.name))): _*)
+      .unionByName(gated.filter(col("gate_reason").isNotNull)
+        .select(carried ++ (col("gate_reason").as("reject_reason") +:
+          extra.map(f => lit(null).cast(f.dataType).as(f.name))): _*)))
+    // REJECTED lands FIRST, deliberately: decided's plan READS
+    // $outDir/admitted (the corpus side of the admit), so the admitted
+    // write invalidates its cache entry (Spark recaches by path) —
+    // admitted-first would recompute the whole gate → dedup → admit
+    // chain for the rejected landing, every batch.
+    timer("decide", () => b.land(decided.filter(col("reject_reason").isNotNull)
+      .select(landedCols(stage.rejectedSchema): _*),
+      "rejected", coalesceTo = Some(4)))
+    timer("admit", () => b.land(
+      stage.admitted(b, decided.filter(col("reject_reason").isNull)),
+      "admitted", stage.admittedParts))
+    stage.afterLanding(b)
   }
 
   /** A landed schema's written columns: everything but the `ingest_batch`

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFns
+import graft.util.Materialize
 
 /** Byte-pair-encoding merge training INSIDE the engine — the tokenizer-
   * construction pass of an LLM data pipeline run as a distributed
@@ -75,7 +76,7 @@ object Bpe {
     trainState(df, textCol, steps)._1
 
   def trainState(df: DataFrame, textCol: String,
-      steps: Int): (DataFrame, DataFrame) = {
+      steps: Int): (DataFrame, DataFrame) = Materialize { m =>
     val spark = df.sparkSession
     import spark.implicits._
     // Round-12 A/B, examined and left alone: the loop runs 2 jobs/step
@@ -92,10 +93,10 @@ object Bpe {
     // its top pair, so let THAT collect do the materialization instead of
     // paying a second job per step for an eager checkpoint (measured:
     // 2 jobs/step -> 1, t26/t31 ~25-30% faster; the lineage truncation is
-    // identical). The previous step's blocks are released only AFTER the
-    // collect has materialized the current step (a lazy checkpoint still
-    // reads its parent on first compute — unpersisting the parent first
-    // would recompute it or fail on the dropped blocks).
+    // identical). The previous step goes to the scope (released on return)
+    // only AFTER the collect has materialized the current step (a lazy
+    // checkpoint still reads its parent on first compute — releasing the
+    // parent first would fail on the dropped blocks).
     var syms = wordTypes(df, textCol).localCheckpoint(eager = false)
     var prev: DataFrame = null
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
@@ -105,7 +106,7 @@ object Bpe {
       val top = pairCounts(syms)
         .orderBy(col("cnt").desc, col("a").asc, col("b").asc)
         .limit(1).collect()
-      if (prev != null) { prev.unpersist(); prev = null }
+      if (prev != null) m.adopt(prev)
       if (top.isEmpty) exhausted = true
       else {
         val (a, b, cnt) =
@@ -119,9 +120,9 @@ object Bpe {
       }
     }
     // the final state is handed back lazy; the caller's first action
-    // (encode join / merge-table display) materializes it once. `prev` is
-    // NOT unpersisted here — the returned frame still depends on it until
-    // that first action runs.
+    // (encode join / merge-table display) materializes it once. Neither it
+    // nor an un-adopted `prev` is released here — the returned frame still
+    // depends on them until that first action runs.
     (merges.toSeq.toDF("step", "left_sym", "right_sym", "pair_count"), syms)
   }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFns
+import graft.util.Materialize
 
 /** Corpus-relative statistics for training-data curation: signals that
   * need a global pass over the corpus (unlike the per-row TextFns), but
@@ -72,34 +73,23 @@ object CorpusStats {
     * merged pairwise.
     */
   def sourceVocabOverlap(df: DataFrame, sourceCol: String,
-      textCol: String): DataFrame = {
-    val st = df.select(col(sourceCol).as("src"),
+      textCol: String): DataFrame = Materialize { m =>
+    val st = m.persist(df.select(col(sourceCol).as("src"),
         explode(TextFns.tokens(col(textCol))).as("t"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     val vocab = st.groupBy(col("src")).agg(count(lit(1)).as("n_vocab"))
     val shared = st.as("a")
       .join(st.as("b"), col("a.t") === col("b.t") && col("a.src") < col("b.src"))
       .groupBy(col("a.src").as("source_a"), col("b.src").as("source_b"))
       .agg(count(lit(1)).as("n_shared"))
-    val out = shared
+    m.result(shared
       .join(vocab.as("va"), col("source_a") === col("va.src"))
       .join(vocab.as("vb"), col("source_b") === col("vb.src"))
       .select(col("source_a"), col("source_b"), col("n_shared"),
         col("va.n_vocab").as("n_vocab_a"), col("vb.n_vocab").as("n_vocab_b"),
         (col("n_shared").cast("double") /
           (col("va.n_vocab") + col("vb.n_vocab") - col("n_shared")).cast("double"))
-          .as("vocab_jaccard"))
-    // same cache-hygiene contract as the Dedup entry points (and the same
-    // PlanAudit escape hatch — see Dedup.materializeAndRelease)
-    if (df.sparkSession.conf.getOption(
-        "spark.graft.skipMaterialize").contains("true")) {
-      out
-    } else {
-      val materialized = out.localCheckpoint(eager = true)
-      st.unpersist()
-      materialized
-    }
+          .as("vocab_jaccard")))
   }
 
   def sourceVocabOverlapSql(table: String, sourceCol: String,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFns
+import graft.util.Materialize
 
 /** Term scoring for the text pipeline: TF-IDF top terms per document.
   * tf = in-doc term count, idf = ln(N / df); top-k per doc by
@@ -102,47 +103,11 @@ object Dedup {
        |  COUNT(*) AS n_docs, MIN($idCol) AS min_id
        |FROM $table GROUP BY 1 HAVING COUNT(*) >= 2""".stripMargin
 
-  /** Distinct (id, shingle) inverted-index relation.
-    *
-    * Persisted (memory-and-disk): every pair operator reads this relation
-    * 2-3× (self-join sides, sizes, verification), and Spark's cache manager
-    * keys on the logical plan, so d03/d04 over the same input share one
-    * entry. Halves the Jaccard pair query at sf0.1. At cluster scale the
-    * equivalent is checkpointing the inverted index to storage once per
-    * dedup campaign rather than recomputing the tokenize+explode per pass.
-    * Lifetime: callers release it via `materializeAndRelease` before
-    * returning — nothing leaks into a long-lived session.
-    */
   // A small corpus often arrives as one file = one partition, which would
   // serialize the shingle+hash work on a single core; spread it first.
   // At scale the input already has >= defaultParallelism partitions and
   // this is a no-op (no shuffle added).
   private def spread(df: DataFrame): DataFrame = graft.util.Spread(df)
-
-  /** Eagerly materialize `result` (localCheckpoint: computes now, severs
-    * lineage — pair results are small next to their inputs), then release
-    * the shared cached relations that fed it. The dedup operators return
-    * through this so a long-lived session never accumulates their
-    * MEMORY_AND_DISK relations (round-4 advice: the d03/d04/d06/d07 entry
-    * points leaked their caches until a global clearCache). The
-    * checkpoint's own blocks are context-cleaned once the returned frame
-    * is unreferenced.
-    */
-  private[operators] def materializeAndRelease(result: DataFrame,
-      cached: DataFrame*): DataFrame = {
-    // The eager checkpoint makes the returned frame audit as an opaque
-    // block scan, so PlanAudit sets this conf to see the real physical
-    // plan; caches then stay registered, which the audit session tolerates
-    // (it exits right after).
-    if (result.sparkSession.conf.getOption(
-        "spark.graft.skipMaterialize").contains("true")) {
-      result
-    } else {
-      val out = result.localCheckpoint(eager = true)
-      cached.foreach(_.unpersist())
-      out
-    }
-  }
 
   /** Per-doc deduplicated shingle ARRAY (id, arr, n_sh) — a pure narrow
     * projection (array_distinct inside the row, never an exploded
@@ -152,12 +117,13 @@ object Dedup {
     * the set size carried alongside so consumers never re-aggregate or
     * join for it. Consumers explode out of the cache per use — the cache
     * holds one row per DOC (smaller than the exploded form it replaced).
+    * Callers persist it in their `util.Materialize` scope: each reads it
+    * 2-3× (self-join sides, verification).
     */
   private def shingleArrs(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
     spread(df).select(col(idCol).as("id"),
         array_distinct(TextFns.shingles(col(textCol), n)).as("arr"))
       .withColumn("n_sh", size(col("arr")).cast("long"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
   /** Per-doc deduplicated shingle array as `ks: array<struct<k:long,
     * s:string>>`, sorted ascending by (k, s) with k = xxhash64(s) — a pure
@@ -187,7 +153,8 @@ object Dedup {
     * `ngramJaccardPairsPrefix` (exact) and `minhashLshPairs` (approx).
     */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
-      n: Int, threshold: Double, maxRows: Long = 100000): DataFrame = {
+      n: Int, threshold: Double, maxRows: Long = 100000): DataFrame =
+      Materialize { m =>
     Similarity.guardSmallSide(df, "ngramJaccardPairs",
       "ngramJaccardPairsPrefix or minhashLshPairs", maxRows)
     // set sizes ride the inverted-index join (every row of a pair's group
@@ -195,21 +162,19 @@ object Dedup {
     // sizes aggregation and its two equi-joins are gone (round 12: the
     // naive candidate generation is the PROOF and stays; the bookkeeping
     // around it does not have to cost three extra exchanges)
-    val arrs = shingleArrs(df, idCol, textCol, n)
+    val arrs = m.persist(shingleArrs(df, idCol, textCol, n))
     val sh = arrs.select(col("id"), col("n_sh"), explode(col("arr")).as("sh"))
     val common = sh.as("a")
       .join(sh.as("b"), col("a.sh") === col("b.sh") && col("a.id") < col("b.id"))
       .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .agg(count(lit(1)).as("n_common"),
         min(col("a.n_sh")).as("n_a"), min(col("b.n_sh")).as("n_b"))
-    materializeAndRelease(
-      common
-        .select(col("id_a"), col("id_b"), col("n_common"),
-          (col("n_common").cast("double") /
-            (col("n_a") + col("n_b") - col("n_common")).cast("double"))
-            .as("jaccard"))
-        .filter(col("jaccard") >= threshold),
-      arrs)
+    m.result(common
+      .select(col("id_a"), col("id_b"), col("n_common"),
+        (col("n_common").cast("double") /
+          (col("n_a") + col("n_b") - col("n_common")).cast("double"))
+          .as("jaccard"))
+      .filter(col("jaccard") >= threshold))
   }
 
   def ngramJaccardPairsSql(table: String, idCol: String, textCol: String,
@@ -246,12 +211,13 @@ object Dedup {
     * whose min-wise estimate is containment-preserving on the inner side.
     */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
-      n: Int, threshold: Double, maxRows: Long = 100000): DataFrame = {
+      n: Int, threshold: Double, maxRows: Long = 100000): DataFrame =
+      Materialize { m =>
     Similarity.guardSmallSide(df, "containmentPairs",
       "a prefix-filtered containment join (one-sided length bound)", maxRows)
     // set sizes ride the inverted-index join (the ngramJaccardPairs
     // round-12 form: no separate sizes aggregation, no size joins)
-    val arrs = shingleArrs(df, idCol, textCol, n)
+    val arrs = m.persist(shingleArrs(df, idCol, textCol, n))
     val sh = arrs.select(col("id"), col("n_sh"), explode(col("arr")).as("sh"))
     val common = sh.as("a")
       .join(sh.as("b"), col("a.sh") === col("b.sh") && col("a.id") < col("b.id"))
@@ -281,7 +247,7 @@ object Dedup {
             .as("containment")))).as("p"))
       .select(col("p.id_inner"), col("p.id_outer"), col("p.n_common"),
         col("p.containment"))
-    materializeAndRelease(bothDirs.filter(col("containment") >= threshold), arrs)
+    m.result(bothDirs.filter(col("containment") >= threshold))
   }
 
   def containmentPairsSql(table: String, idCol: String, textCol: String,
@@ -316,7 +282,7 @@ object Dedup {
     * the candidate pairs (the fraction shrinks as t grows).
     */
   def ngramJaccardPairsPrefix(df: DataFrame, idCol: String, textCol: String,
-      n: Int, threshold: Double): DataFrame = {
+      n: Int, threshold: Double): DataFrame = Materialize { m =>
     // Per-doc shingles in xxhash64-canonical order (see shingleStructs).
     // The prefix-filter theorem admits ANY global total order shared by all
     // docs; a frequency-ascending order (classic PPJoin) was tried and
@@ -328,11 +294,10 @@ object Dedup {
     // verify stage is the cost that matters — so the order is optimized
     // for the merge (random 64-bit keys ⇒ ties only on true equality) and
     // the build stays a narrow projection.
-    val arrs = shingleStructs(df, idCol, textCol, n)
+    val arrs = m.persist(shingleStructs(df, idCol, textCol, n)
       .withColumn("n_sh", size(col("ks")).cast("long"))
       .withColumn("plen",
-        (col("n_sh") - ceil(col("n_sh") * threshold) + 1).cast("int"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        (col("n_sh") - ceil(col("n_sh") * threshold) + 1).cast("int")))
     // PPJoin candidate generation: besides sharing a prefix shingle, a
     // qualifying pair must pass (a) the LENGTH filter — J >= t bounds the
     // size ratio to [t·|a|, |a|/t] — and (b) the POSITIONAL filter: if the
@@ -363,9 +328,7 @@ object Dedup {
             .cast("double") >= minOverlap)
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .distinct()
-    materializeAndRelease(
-      verifyPairs(cands, arrs.select(col("id"), col("ks")), threshold),
-      arrs)
+    m.result(verifyPairs(cands, arrs.select(col("id"), col("ks")), threshold))
   }
 
   /** Exact Jaccard verification of candidate pairs against the per-doc
@@ -463,7 +426,8 @@ object Dedup {
     * exact shingle Jaccard and filtered at `threshold`.
     */
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
-      n: Int, numHashes: Int, rowsPerBand: Int, threshold: Double): DataFrame = {
+      n: Int, numHashes: Int, rowsPerBand: Int, threshold: Double): DataFrame =
+      Materialize { m =>
     require(numHashes % rowsPerBand == 0,
       s"numHashes ($numHashes) must be a multiple of rowsPerBand " +
         s"($rowsPerBand) — trailing hashes would be computed but never banded")
@@ -481,12 +445,9 @@ object Dedup {
     // and a forced broadcast would OOM where a shuffle join completes; AQE
     // converts the verification joins to broadcast when the sides are
     // genuinely small.
-    val arrs = shingleStructs(df, idCol, textCol, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    materializeAndRelease(
-      verifyPairs(cands, arrs, threshold)
-        .select(col("id_a"), col("id_b"), col("jaccard")),
-      arrs)
+    val arrs = m.persist(shingleStructs(df, idCol, textCol, n))
+    m.result(verifyPairs(cands, arrs, threshold)
+      .select(col("id_a"), col("id_b"), col("jaccard")))
   }
 
   def minhashLshPairsSql(table: String, idCol: String, textCol: String,
@@ -545,7 +506,7 @@ object Dedup {
     */
   def incrementalDupPairs(corpus: DataFrame, batch: DataFrame,
       idCol: String, textCol: String, n: Int, numHashes: Int,
-      rowsPerBand: Int, threshold: Double): DataFrame = {
+      rowsPerBand: Int, threshold: Double): DataFrame = Materialize { m =>
     require(numHashes % rowsPerBand == 0,
       s"numHashes ($numHashes) must be a multiple of rowsPerBand ($rowsPerBand)")
     val numBands = numHashes / rowsPerBand
@@ -560,16 +521,13 @@ object Dedup {
       .distinct()
     // one shingle relation over both sides (ids are disjoint by contract) —
     // verifyPairs reads it for each end of every candidate pair
-    val arrs = shingleStructs(
+    val arrs = m.persist(shingleStructs(
       corpus.select(col(idCol), col(textCol))
         .unionByName(batch.select(col(idCol), col(textCol))),
-      idCol, textCol, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    materializeAndRelease(
-      verifyPairs(cands, arrs, threshold)
-        .select(col("id_a").as("batch_id"), col("id_b").as("corpus_id"),
-          col("jaccard")),
-      arrs)
+      idCol, textCol, n))
+    m.result(verifyPairs(cands, arrs, threshold)
+      .select(col("id_a").as("batch_id"), col("id_b").as("corpus_id"),
+        col("jaccard")))
   }
 
   /** Oracle for `incrementalDupPairs`; `corpusRel`/`batchRel` are table
@@ -663,7 +621,8 @@ object Dedup {
     */
   def incrementalDupPairsProbe(index: DataFrame, corpus: DataFrame,
       batch: DataFrame, idCol: String, textCol: String, n: Int,
-      numHashes: Int, rowsPerBand: Int, threshold: Double): DataFrame = {
+      numHashes: Int, rowsPerBand: Int, threshold: Double): DataFrame =
+      Materialize { m =>
     require(numHashes % rowsPerBand == 0,
       s"numHashes ($numHashes) must be a multiple of rowsPerBand ($rowsPerBand)")
     val numBands = numHashes / rowsPerBand
@@ -672,26 +631,22 @@ object Dedup {
         numBands, rowsPerBand)
       .select(xxhash64(col("band"), col("sig")).as("bk"),
         col("band"), col("sig"), col("id").as("id_a"))
-    val cands = bBands
+    val cands = m.persist(bBands
       .join(index.select(col("bk"), col("band"), col("sig"),
         col("id").as("id_b")), Seq("bk", "band", "sig"))
       .select(col("id_a"), col("id_b"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     // verification reads shingles for the batch plus ONLY the corpus docs
     // that appear as candidates (left-semi prune before shingling)
     val prunedCorpus = corpus.join(
       cands.select(col("id_b").as(idCol)).distinct(), Seq(idCol), "left_semi")
-    val arrs = shingleStructs(
+    val arrs = m.persist(shingleStructs(
       prunedCorpus.select(col(idCol), col(textCol))
         .unionByName(batch.select(col(idCol), col(textCol))),
-      idCol, textCol, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    materializeAndRelease(
-      verifyPairs(cands, arrs, threshold)
-        .select(col("id_a").as("batch_id"), col("id_b").as("corpus_id"),
-          col("jaccard")),
-      arrs, cands)
+      idCol, textCol, n))
+    m.result(verifyPairs(cands, arrs, threshold)
+      .select(col("id_a").as("batch_id"), col("id_b").as("corpus_id"),
+        col("jaccard")))
   }
 
   /** The practical corpus-cleaning operator: drop near-duplicates, keeping
@@ -717,21 +672,20 @@ object Dedup {
     * in O(component diameter) rounds (near-dup components are shallow —
     * LSH pairs are nearly cliques). Each round is one join + one
     * aggregation; the driver only evaluates a scalar convergence count per
-    * round, never the data. The label relation is re-persisted per round
-    * and the superseded cache released. For graphs with deep chains the
-    * standard upgrade is path-doubling / large-star-small-star; for dedup
-    * graphs the diameter is small and this plan is simpler and shuffles
-    * less per round.
+    * round, never the data (see [[connectedComponents]] for the rounds'
+    * lineage cuts). For graphs with deep chains the standard upgrade is
+    * path-doubling / large-star-small-star; for dedup graphs the diameter
+    * is small and this plan is simpler and shuffles less per round.
     */
   def dupClusters(df: DataFrame, idCol: String, textCol: String,
       n: Int, numHashes: Int, rowsPerBand: Int, threshold: Double,
-      maxIters: Int = 20): DataFrame = {
-    val pairs = minhashLshPairs(df, idCol, textCol, n, numHashes, rowsPerBand, threshold)
-      .select(col("id_a"), col("id_b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      maxIters: Int = 20): DataFrame = Materialize { m =>
+    val pairs = m.persist(
+      minhashLshPairs(df, idCol, textCol, n, numHashes, rowsPerBand, threshold)
+        .select(col("id_a"), col("id_b")))
+    // labels come back materialized, so the pair relation is released on
+    // return
     val labels = connectedComponents(pairs, maxIters)
-    // labels are persisted and materialized — the pair relation is done
-    pairs.unpersist()
     df.select(col(idCol).as("id"))
       .join(labels, Seq("id"), "left")
       .select(col("id"), coalesce(col("cluster"), col("id")).as("cluster"))
@@ -752,8 +706,9 @@ object Dedup {
     * component, and a (hop+jump) fixpoint is a plain-propagation fixpoint
     * (jump ≤ hop ≤ labels pointwise), i.e. the component minimum — the
     * doubling changes round count, never the result. Per round the driver
-    * evaluates one scalar; per-round caches are released as superseded,
-    * and the edge relation is released on convergence.
+    * evaluates one scalar; superseded rounds' checkpoint blocks are left
+    * to the context cleaner, and the edge relation is released on return
+    * (or on a throw).
     *
     * Iterative-plan hygiene: each round's label relation references the
     * previous one MORE than once (neighbor join + jump self-join), so
@@ -762,12 +717,13 @@ object Dedup {
     * round therefore cuts lineage with an eager `localCheckpoint` (cached
     * blocks, no lineage), keeping the per-round plan constant-size.
     */
-  def connectedComponents(pairs: DataFrame, maxIters: Int = 20): DataFrame = {
-    val Mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // undirected edge list, both directions
-    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .persist(Mem)
+  def connectedComponents(pairs: DataFrame, maxIters: Int = 20): DataFrame =
+      Materialize { m =>
+    // undirected edge list, both directions; released on return (the
+    // labels are materialized by then)
+    val edges = m.persist(
+      pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+        .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst"))))
     // only nodes with at least one edge participate in propagation — on a
     // mostly-unique corpus that's a tiny fraction of the table; singletons
     // are handled by callers (left join + coalesce to own id). Seed with
@@ -806,7 +762,6 @@ object Dedup {
       converged = changed == 0
       iter += 1
     }
-    edges.unpersist()
     // an exact operator must not silently return a partial fixpoint: with
     // pointer doubling even a diameter-2^20 chain fits the default budget,
     // so hitting this means something is structurally wrong with the input.
@@ -1142,14 +1097,14 @@ object Dedup {
     * quadratic. The declared 32/4/3 shape keeps the oracle cheap at sf0.01.
     */
   def simhashHammingPairs(df: DataFrame, idCol: String, textCol: String,
-      bits: Int = 32, bands: Int = 4, radius: Int = 3): DataFrame = {
+      bits: Int = 32, bands: Int = 4, radius: Int = 3): DataFrame =
+      Materialize { m =>
     require(radius < bands,
       s"pigeonhole exactness needs radius < bands (got radius=$radius, bands=$bands)")
     require(bits % bands == 0, "bands must divide bits")
     val bandBits = bits / bands
     val mask = (1L << bandBits) - 1
-    val sh = simhashInt(df, idCol, textCol, bits)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sh = m.persist(simhashInt(df, idCol, textCol, bits))
     val bandVals = (0 until bands).map(j =>
       shiftright(col("sh"), j * bandBits).bitwiseAND(lit(mask)))
     val banded = sh.select(col("id"), col("sh"),
@@ -1166,7 +1121,7 @@ object Dedup {
         bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).cast("int"))
       .where(col("hamming") <= radius)
       .select(col("id_a"), col("id_b"), col("hamming"))
-    materializeAndRelease(out, sh)
+    m.result(out)
   }
 
   /** Brute-force oracle: all pairs, `bit_count(xor)` ≤ radius. Equal to the
@@ -1214,7 +1169,7 @@ object Dedup {
     */
   def hammingPairs64(sig: DataFrame, idCol: String, hiCol: String,
       loCol: String, bands: Int = 4, radius: Int = 3,
-      checkIds: Boolean = true): DataFrame = {
+      checkIds: Boolean = true): DataFrame = Materialize { m =>
     require(radius < bands,
       s"pigeonhole exactness needs radius < bands (got radius=$radius, bands=$bands)")
     require(64 % bands == 0 && 32 % (64 / bands) == 0,
@@ -1222,9 +1177,8 @@ object Dedup {
     val bandBits = 64 / bands
     val mask = (1L << bandBits) - 1
     val perHalf = 32 / bandBits
-    val s = sig.filter(col(hiCol).isNotNull && col(loCol).isNotNull)
-      .select(col(idCol).as("id"), col(hiCol).as("hi"), col(loCol).as("lo"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val s = m.persist(sig.filter(col(hiCol).isNotNull && col(loCol).isNotNull)
+      .select(col(idCol).as("id"), col(hiCol).as("hi"), col(loCol).as("lo")))
     // `checkIds = false` (ADVICE r9): the two guard jobs are cheap on
     // cached data but NOT free inside timed regions — per-micro-batch
     // streaming dedup and the scale-bench self-join samples turn them off
@@ -1260,7 +1214,7 @@ object Dedup {
           bit_count(col("lo_a").bitwiseXOR(col("lo_b")))).cast("int"))
       .where(col("hamming") <= radius)
       .select(col("id_a"), col("id_b"), col("hamming"))
-    materializeAndRelease(out, s)
+    m.result(out)
   }
 
   /** INCREMENTAL [[hammingPairs64]] — the d12 daily-ingest shape for

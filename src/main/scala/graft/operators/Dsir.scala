@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFns
+import graft.util.Materialize
 
 /** DSIR-style data selection via importance resampling (Xie et al. 2023,
   * "Data Selection for Language Models via Importance Resampling"): score
@@ -254,16 +255,17 @@ object Dsir {
     */
   def driftStat(batch: DataFrame, textCol: String, trained: Map[Long, Long],
       trainTotal: Long, buckets: Int, threshold: Double,
-      label: String, allowEmpty: Boolean = false): DataFrame = {
+      label: String, allowEmpty: Boolean = false): DataFrame =
+      Materialize { m =>
     require(buckets > 0, s"buckets ($buckets) must be positive")
     val d = trainTotal + buckets
-    val obs = batch
+    val obs = m.persist(batch
       .select(explode(TextFns.tokens(col(textCol))).as("term"))
       .select(pmod(TextFns.md5Hash32(col("term")), lit(buckets.toLong)).as("bucket"))
-      .groupBy(col("bucket")).agg(count(lit(1)).as("obs"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .groupBy(col("bucket")).agg(count(lit(1)).as("obs")))
     val n = Option(obs.agg(sum(col("obs"))).collect()(0).get(0))
       .map(_.asInstanceOf[Long]).getOrElse(0L)
+    val spark = batch.sparkSession
     if (n == 0 && allowEmpty) {
       // A zero-token batch (all-empty captions, or an empty replayed
       // micro-batch) carries no distribution to test. In a streaming
@@ -272,9 +274,7 @@ object Dsir {
       // stream wedges permanently on it. Callers in the streaming path
       // ask for a NULL verdict row instead (drifted unknown, not false) —
       // the landed record still shows the batch happened.
-      obs.unpersist()
-      val spark = batch.sparkSession
-      return spark.createDataFrame(
+      spark.createDataFrame(
         java.util.Arrays.asList(
           org.apache.spark.sql.Row(label, 0L, 0L, null)),
         org.apache.spark.sql.types.StructType(Seq(
@@ -286,58 +286,58 @@ object Dsir {
             org.apache.spark.sql.types.LongType, nullable = false),
           org.apache.spark.sql.types.StructField("drifted",
             org.apache.spark.sql.types.BooleanType, nullable = true))))
+    } else {
+      require(n > 0, "drift monitor needs a non-empty batch (0 tokens)")
+      // the KsTest/Gini overflow discipline: diff must stay exact in BIGINT
+      require(n.toDouble * d < 9e18,
+        s"driftStat n*D = $n*$d exceeds exact BIGINT arithmetic — " +
+          "shrink the monitored batch (it is a sample, not the corpus)")
+      // all `buckets` cells with their smoothed trained counts — a plan
+      // constant (the weight-map contract), so empty cells are present
+      val cells = spark.createDataFrame(
+        java.util.Arrays.asList((0L until buckets.toLong).map { b =>
+          org.apache.spark.sql.Row(b, trained.getOrElse(b, 0L) + 1L)
+        }: _*),
+        org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("bucket",
+            org.apache.spark.sql.types.LongType, nullable = false),
+          org.apache.spark.sql.types.StructField("r",
+            org.apache.spark.sql.types.LongType, nullable = false))))
+      val diff = coalesce(col("obs"), lit(0L)) * lit(d) - lit(n) * col("r")
+      // Quantization that is IDENTICAL in both engines by construction:
+      // every step is a mirrored IEEE double op on identical inputs —
+      // q = diff²/(D·n·R), then floor(q·1e6 + 0.5) as an exact integer
+      // (q·1e6 ≤ ~1e14 < 2^53). Engine round()s disagree here: Spark
+      // rounds the exact binary value via BigDecimal while DuckDB rounds
+      // a float-multiplied product — at sf1 the 3e10 statistic diverged
+      // in the 6th decimal through that path. Micro-units stay integers
+      // end to end; the statistic column IS the exact micro count.
+      val q = (diff.cast("double") * diff.cast("double")) /
+        (lit(d.toDouble) * lit(n.toDouble) * col("r").cast("double"))
+      val termMicro = floor(q * lit(1e6) + lit(0.5)).cast("long")
+      // SECOND overflow guard (the n·D one above only keeps `diff` exact):
+      // with an untrained bucket (R=1) absorbing a fully-shifted batch,
+      // q can reach ~n·D, so q·1e6 can pass 2^53 (the exact-integer claim
+      // dies silently) or even Long.MaxValue, where Spark's non-ANSI
+      // double→long cast saturates while DuckDB's CAST errors — sum wrap
+      // could then report drifted=false exactly when drift is most extreme.
+      // Data-dependent, so the guard lives IN the plan: assert_true throws
+      // loudly at materialization if any micro term left the exact range or
+      // the integer sum went negative. When it passes it contributes no
+      // rows/columns (assert_true ⇒ NULL ⇒ filter true), so oracle parity
+      // is untouched.
+      val out = cells.join(broadcast(obs), Seq("bucket"), "left")
+        .agg(sum(termMicro).as("chi2m"), max(termMicro).as("maxm"))
+        .where(assert_true(
+          col("maxm") < lit(9.0e15) && col("chi2m") >= lit(0L),
+          lit(s"driftStat micro term exceeded exact-integer range " +
+            s"(n=$n, D=$d): shrink the monitored batch — it is a sample, " +
+            "not the corpus")).isNull)
+        .select(lit(label).as("batch"), lit(n).as("n_terms"),
+          col("chi2m").as("chi2_micro"),
+          (col("chi2m") > lit(math.round(threshold * 1e6))).as("drifted"))
+      m.result(out)
     }
-    require(n > 0, "drift monitor needs a non-empty batch (0 tokens)")
-    // the KsTest/Gini overflow discipline: diff must stay exact in BIGINT
-    require(n.toDouble * d < 9e18,
-      s"driftStat n*D = $n*$d exceeds exact BIGINT arithmetic — " +
-        "shrink the monitored batch (it is a sample, not the corpus)")
-    val spark = batch.sparkSession
-    // all `buckets` cells with their smoothed trained counts — a plan
-    // constant (the weight-map contract), so empty cells are present
-    val cells = spark.createDataFrame(
-      java.util.Arrays.asList((0L until buckets.toLong).map { b =>
-        org.apache.spark.sql.Row(b, trained.getOrElse(b, 0L) + 1L)
-      }: _*),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("bucket",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("r",
-          org.apache.spark.sql.types.LongType, nullable = false))))
-    val diff = coalesce(col("obs"), lit(0L)) * lit(d) - lit(n) * col("r")
-    // Quantization that is IDENTICAL in both engines by construction:
-    // every step is a mirrored IEEE double op on identical inputs —
-    // q = diff²/(D·n·R), then floor(q·1e6 + 0.5) as an exact integer
-    // (q·1e6 ≤ ~1e14 < 2^53). Engine round()s disagree here: Spark
-    // rounds the exact binary value via BigDecimal while DuckDB rounds
-    // a float-multiplied product — at sf1 the 3e10 statistic diverged
-    // in the 6th decimal through that path. Micro-units stay integers
-    // end to end; the statistic column IS the exact micro count.
-    val q = (diff.cast("double") * diff.cast("double")) /
-      (lit(d.toDouble) * lit(n.toDouble) * col("r").cast("double"))
-    val termMicro = floor(q * lit(1e6) + lit(0.5)).cast("long")
-    // SECOND overflow guard (the n·D one above only keeps `diff` exact):
-    // with an untrained bucket (R=1) absorbing a fully-shifted batch,
-    // q can reach ~n·D, so q·1e6 can pass 2^53 (the exact-integer claim
-    // dies silently) or even Long.MaxValue, where Spark's non-ANSI
-    // double→long cast saturates while DuckDB's CAST errors — sum wrap
-    // could then report drifted=false exactly when drift is most extreme.
-    // Data-dependent, so the guard lives IN the plan: assert_true throws
-    // loudly at materialization if any micro term left the exact range or
-    // the integer sum went negative. When it passes it contributes no
-    // rows/columns (assert_true ⇒ NULL ⇒ filter true), so oracle parity
-    // is untouched.
-    val out = cells.join(broadcast(obs), Seq("bucket"), "left")
-      .agg(sum(termMicro).as("chi2m"), max(termMicro).as("maxm"))
-      .where(assert_true(
-        col("maxm") < lit(9.0e15) && col("chi2m") >= lit(0L),
-        lit(s"driftStat micro term exceeded exact-integer range " +
-          s"(n=$n, D=$d): shrink the monitored batch — it is a sample, " +
-          "not the corpus")).isNull)
-      .select(lit(label).as("batch"), lit(n).as("n_terms"),
-        col("chi2m").as("chi2_micro"),
-        (col("chi2m") > lit(math.round(threshold * 1e6))).as("drifted"))
-    Dedup.materializeAndRelease(out, obs)
   }
 
   /** [[driftStat]] oracle: the same cell arithmetic relationally —

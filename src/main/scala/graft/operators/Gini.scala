@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.util.Materialize
+
 /** Exact Gini coefficient of a numeric column — the concentration
   * diagnostic (how skewed is revenue across orders / token budget across
   * sources): G = Σᵢⱼ|xᵢ−xⱼ| / (2·n·Σx), 0 = perfectly even, →1 = one row
@@ -11,10 +13,10 @@ import org.apache.spark.sql.functions._
   * Engine-exact: values are exact cents; the pairwise-difference sum
   * collapses by sorted distinct value v (count c_v, cumulative count C,
   * cumulative sum S) to Σ_v c_v·(v·C_prev − S_prev) — every factor an
-  * integer, the product carried as exact decimal (c ≤ 2³¹ and the inner
-  * term ≤ ~10¹⁵ keep the product precision ≤ 26 digits — exact in
-  * DECIMAL, mirrored as HUGEINT arithmetic in DuckDB), and no float until
-  * the one display division num / (n·Σx).
+  * integer, the product carried as exact decimal (c ≤ 2³¹ and the local
+  * inner term < 2·maxAbs·n, cast DECIMAL(20,0), keep the product exact in
+  * DECIMAL(31,0), mirrored as HUGEINT arithmetic in DuckDB), and no float
+  * until the one display division num / (n·Σx).
   *
   * Scale: one scan to per-value counts (map-side combined), then the
   * cumulative (C, S) terms via [[PrefixSum.localRunningSums]] fused with
@@ -25,27 +27,26 @@ object Gini {
 
   /** One row: n, total_cents, gini (6dp double). */
   def ofColumn(df: DataFrame, valueCol: String,
-      numBuckets: Int = 256): DataFrame = {
-    val counts = df.select(
+      numBuckets: Int = 256): DataFrame = Materialize { m =>
+    val counts = m.persist(df.select(
         (col(valueCol).cast("decimal(9,2)") * 100).cast("long").as("v"))
       .groupBy(col("v")).agg(count(lit(1)).as("c"))
-      .withColumn("s", col("v") * col("c"))
-      .persist()
+      .withColumn("s", col("v") * col("c")))
     val s0 = counts.agg(min(col("v")), max(col("v")),
       sum(col("c")), sum(col("s"))).collect()(0)
     require(!s0.isNullAt(0), "Gini needs a non-empty column")
     val (n, total) = (s0.getLong(2), s0.getLong(3))
     require(total > 0, s"Gini needs a positive total (got $total)")
-    // Loud overflow guard (the KsTest n1·n2 discipline): the inner term is
-    // bounded by maxAbs(v)·n, and DECIMAL(16,0) must hold it exactly — in
-    // non-ANSI mode an overflowing cast yields silent NULL which sum()
-    // drops, i.e. a silently WRONG gini. Fail fast instead; past this
-    // regime widen the cast (DECIMAL(38,0) trades per-row allocation for
-    // range — the p14 lesson) rather than trusting the docstring.
+    // Loud overflow guard (the KsTest n1·n2 discipline): the local inner
+    // term is BIGINT arithmetic bounded by 2·maxAbs(v)·n, cast DECIMAL(20,0);
+    // maxAbs·n < 9e15 keeps it exact in both, where non-ANSI BIGINT overflow
+    // would wrap silently into a WRONG gini. Past this regime compute it in
+    // DECIMAL(38,0) (per-row allocation for range — the p14 lesson) rather
+    // than trusting the docstring.
     val maxAbs = math.max(math.abs(s0.getLong(0)), math.abs(s0.getLong(1)))
     require(maxAbs.toDouble * n < 9e15,
-      s"Gini inner-term bound maxAbs(v)*n = $maxAbs*$n exceeds the exact " +
-        "DECIMAL(16,0) regime — widen the numerator decimals before scaling further")
+      s"Gini local inner-term bound 2*maxAbs(v)*n = 2*$maxAbs*$n leaves the " +
+        "exact DECIMAL(20,0) regime — widen the inner term before scaling further")
     // SECOND AND LAST job — the fused per-bucket pass (the p17 shape).
     // The numerator decomposes per range bucket: with lC/lS the LOCAL
     // (within-bucket) inclusive cumulatives and (offC, offS) the bucket's
@@ -56,10 +57,10 @@ object Gini {
     // — ONE window+aggregate job collects (c_tot, s_tot, partial) per
     // bucket and the driver folds offsets into the exact numerator,
     // replacing runningSums' two jobs and their broadcast join.
-    // innerLocal = Σ_{u<v in bucket} (v−u)·c_u ∈ [0, 2·maxAbs·n] — same
-    // envelope as the global inner; cast DECIMAL(20,0) (guarded exact by
-    // the maxAbs·n require above), times c as DECIMAL keeps the product
-    // exact; the driver fold is BigInt/BigDecimal, also exact.
+    // innerLocal = Σ_{u<v in bucket} (v−u)·c_u ∈ [0, 2·maxAbs·n]; cast
+    // DECIMAL(20,0) (guarded exact by the maxAbs·n require above), times
+    // c as DECIMAL keeps the product exact; the driver fold is
+    // BigInt/BigDecimal, also exact.
     val local = PrefixSum.localRunningSums(counts, "v", Seq("c", "s"),
       numBuckets, (s0.getLong(0), s0.getLong(1)))
     val innerLocal = (col("v") * (col("c_lcum") - col("c")) -
@@ -73,7 +74,6 @@ object Gini {
         (r.getLong(0), IndexedSeq(r.getLong(1), r.getLong(2)),
           BigDecimal(r.getDecimal(3)))
       }
-    counts.unpersist()
     val folded = PrefixSum.exclusiveOffsets(rows.map(t => (t._1, t._2)),
       numBuckets)
     var acc = BigDecimal(0)

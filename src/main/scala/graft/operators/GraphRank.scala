@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.util.Materialize
+
 /** Integer-exact PageRank over an undirected pair relation — graph
   * centrality for the near-dup graph. d15 picks a cluster's canonical
   * document by a quality score; this ranks by STRUCTURE: the doc most
@@ -179,7 +181,7 @@ object GraphRank {
     * parent edge), which any cycle member fails.
     */
   def flattenHierarchy(edges: DataFrame, childCol: String, parentCol: String,
-      maxRounds: Int = 20): DataFrame = {
+      maxRounds: Int = 20): DataFrame = Materialize { m =>
     val e = edges.select(col(childCol).cast("long").as("c"),
       col(parentCol).cast("long").as("p")).distinct().localCheckpoint()
     val nodes = e.select(col("c").as("node"))
@@ -196,9 +198,9 @@ object GraphRank {
       // over `next`, and its join's map stage computes every partition of
       // `next` — so the checkpoint materializes inside the job the round
       // already pays instead of costing an eager second job per round.
-      // `state` is unpersisted only after that probe has run (the lazy
-      // checkpoint reads its parent — which includes `state` — on first
-      // compute).
+      // `state` is handed to the scope only after that probe has run (the
+      // lazy checkpoint reads its parent — which includes `state` — on
+      // first compute); the last `state` stays, the result reads it.
       val next = state.as("s")
         .join(state.select(col("node").as("anc"), col("anc").as("anc2"),
           col("d").as("d2")).as("t"), Seq("anc"))
@@ -207,7 +209,7 @@ object GraphRank {
         .localCheckpoint(eager = false)
       converged = next.as("a").join(state.as("b"), Seq("node"))
         .filter(col("a.anc") =!= col("b.anc")).isEmpty
-      state.unpersist()
+      m.adopt(state)
       state = next
       round += 1
     }
@@ -292,7 +294,8 @@ object GraphRank {
     * component; maxDepth bounds the rounds regardless of graph diameter.
     */
   def bfsDepths(pairs: DataFrame, aCol: String, bCol: String,
-      seeds: DataFrame, seedCol: String, maxDepth: Int): DataFrame = {
+      seeds: DataFrame, seedCol: String, maxDepth: Int): DataFrame =
+      Materialize { m =>
     require(maxDepth >= 0 && maxDepth <= 8, s"maxDepth=$maxDepth out of [0,8]")
     val ed = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
       .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
@@ -304,23 +307,19 @@ object GraphRank {
     // action (Catalyst does not CSE across plan branches). Persisting each
     // round turns both references into scans of ONE InMemoryRelation —
     // no extra jobs (the caches materialize inside the final action) —
-    // and materializeAndRelease drops them once the result is computed.
+    // and the scope drops them once the result is computed.
     // (Round 12: d24 taskSec 11.9 → see OPTIMIZATION_r12.md.)
-    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var reached = seeds.select(col(seedCol).as("id"), lit(0).as("depth"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    cached += reached
+    var reached = m.persist(
+      seeds.select(col(seedCol).as("id"), lit(0).as("depth")))
     for (k <- 1 to maxDepth) {
       val frontier = reached.filter(col("depth") === k - 1)
         .select(col("id").as("fid"))
       val next = ed.join(frontier, col("src") === col("fid"))
         .select(col("dst").as("id"), lit(k).as("depth"))
-      reached = reached.union(next)
-        .groupBy(col("id")).agg(min(col("depth")).as("depth"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      cached += reached
+      reached = m.persist(reached.union(next)
+        .groupBy(col("id")).agg(min(col("depth")).as("depth")))
     }
-    Dedup.materializeAndRelease(reached, cached.toSeq: _*)
+    m.result(reached)
   }
 
   /** DuckDB mirror of [[bfsDepths]]: unrolled frontier-expand + min-fold

@@ -364,10 +364,6 @@ object KMeans {
     semanticDedupSqlWithK(table, idCol, vecCol, dim,
       autoKSql(table, minK, docsPerCluster), iters, threshold)
 
-  def semanticDedupSql(table: String, idCol: String, vecCol: String,
-      dim: Int, k: Int, iters: Int, threshold: Double): String =
-    semanticDedupSqlWithK(table, idCol, vecCol, dim, k.toString, iters, threshold)
-
   private def semanticDedupSqlWithK(table: String, idCol: String, vecCol: String,
       dim: Int, kSql: String, iters: Int, threshold: Double): String = {
     val (ctes, out) = assignCtes(table, idCol, vecCol, dim, kSql, iters)

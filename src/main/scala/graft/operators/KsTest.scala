@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.Materialize
+
 /** Exact two-sample Kolmogorov–Smirnov distance between a numeric column
   * of two slices — the nonparametric drift gate beside p09's binned
   * chi-square: sensitive anywhere in the distribution, no binning choice.
@@ -45,14 +47,14 @@ object KsTest {
       when(predA, 1L).otherwise(0L).as("ca"),
       when(predA, 0L).otherwise(1L).as("cb")), numBuckets)
 
-  private def fromTagged(tagged: DataFrame, numBuckets: Int): DataFrame = {
+  private def fromTagged(tagged: DataFrame, numBuckets: Int): DataFrame =
+      Materialize { m =>
     // the counts relation backs TWO driver actions (scalars, then the
     // fused per-bucket pass) — persist it once or the per-value
     // aggregation recomputes per action (measured: 4.3 s -> 3.0 s at
     // sf0.1; p17 is job-count-bound, not data-bound)
-    val counts = tagged
-      .groupBy(col("v")).agg(sum(col("ca")).as("ca"), sum(col("cb")).as("cb"))
-      .persist()
+    val counts = m.persist(tagged
+      .groupBy(col("v")).agg(sum(col("ca")).as("ca"), sum(col("cb")).as("cb")))
     // one scalar job for range AND sizes (each further job is a fixed
     // scheduling cost at this data size — p17 is job-count-bound)
     val s0 = counts.agg(min(col("v")), max(col("v")),
@@ -87,7 +89,6 @@ object KsTest {
         (r.getLong(0), IndexedSeq(r.getLong(1), r.getLong(2)),
           (r.getLong(3), r.getLong(4)))
       }
-    counts.unpersist()
     val folded = PrefixSum.exclusiveOffsets(rows.map(t => (t._1, t._2)),
       numBuckets)
     var sup = 0L

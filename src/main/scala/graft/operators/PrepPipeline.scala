@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFns
+import graft.util.Materialize
 
 /** The whole training-data prep chain composed END TO END — quality gate →
   * MinHash-LSH near-dup removal → benchmark decontamination → deterministic
@@ -35,7 +36,7 @@ object PrepPipeline {
   def funnel(docs: DataFrame, idCol: String, textCol: String,
       evalBelow: Long, minTokens: Int, n: Int, numHashes: Int,
       rowsPerBand: Int, threshold: Double, contamFrac: Double,
-      trainFrac: Double, validFrac: Double): DataFrame = {
+      trainFrac: Double, validFrac: Double): DataFrame = Materialize { m =>
     val evalDocs = docs.filter(col(idCol) < evalBelow)
     // the gated corpus (scan + tokenize-count + filter) feeds FOUR
     // consumers — the LSH dedup, the decontaminate shingle pass, its sizes
@@ -43,14 +44,14 @@ object PrepPipeline {
     // (two of them materialize eagerly inside their operators), so without
     // a persist the corpus scan+tokenization re-runs once per consumer
     // (guide §5: persist what several consumers read, inside the query).
-    // Released via materializeAndRelease once the funnel's counts exist.
+    // Released by the scope once the funnel's counts exist.
     // spread BEFORE tokenize+persist: the cache inherits the partitioning,
     // so every consumer's shingle/minhash stage-1 runs parallel out of it
     // (util.Spread: no-op at scale)
-    val corpus = graft.util.Spread(docs.filter(col(idCol) >= evalBelow))
-      .select(col(idCol), col(textCol),
-        size(TextFns.tokens(col(textCol))).cast("long").as("n_tok"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val corpus = m.persist(
+      graft.util.Spread(docs.filter(col(idCol) >= evalBelow))
+        .select(col(idCol), col(textCol),
+          size(TextFns.tokens(col(textCol))).cast("long").as("n_tok")))
     val pass = corpus.filter(col("n_tok") >= minTokens)
       .select(col(idCol), col(textCol))
     val dupIds = Dedup
@@ -60,17 +61,15 @@ object PrepPipeline {
     val contam = Decontaminate
       .overlapFlags(pass, evalDocs, idCol, textCol, n, contamFrac)
       .select(col("id").as(idCol), col("contaminated"))
-    Dedup.materializeAndRelease(
-      Sampling.split(corpus, idCol, trainFrac, validFrac)
-        .join(dupIds, Seq(idCol), "left")
-        .join(contam, Seq(idCol), "left")
-        .select(
-          when(col("n_tok") < minTokens, "10_dropped_gate")
-            .when(col("is_dup"), "20_dropped_dup")
-            .when(col("contaminated"), "30_dropped_contaminated")
-            .otherwise(concat(lit("40_kept_"), col("split"))).as("stage"))
-        .groupBy(col("stage")).agg(count(lit(1)).as("n")),
-      corpus)
+    m.result(Sampling.split(corpus, idCol, trainFrac, validFrac)
+      .join(dupIds, Seq(idCol), "left")
+      .join(contam, Seq(idCol), "left")
+      .select(
+        when(col("n_tok") < minTokens, "10_dropped_gate")
+          .when(col("is_dup"), "20_dropped_dup")
+          .when(col("contaminated"), "30_dropped_contaminated")
+          .otherwise(concat(lit("40_kept_"), col("split"))).as("stage"))
+      .groupBy(col("stage")).agg(count(lit(1)).as("n")))
   }
 
   /** The MULTIMODAL twin of [[funnel]]: the image-corpus prep chain
@@ -96,14 +95,13 @@ object PrepPipeline {
     */
   def mediaFunnel(images: DataFrame, nameCol: String, binCol: String,
       maxW: Int, maxH: Int, bands: Int, radius: Int,
-      trainFrac: Double, validFrac: Double): DataFrame = {
-    val geom = Multimodal.resizeFit(
+      trainFrac: Double, validFrac: Double): DataFrame = Materialize { m =>
+    val geom = m.persist(Multimodal.resizeFit(
         images.select(col(nameCol).as("name"), col(binCol).as("payload")),
         "payload", maxW, maxH)
       .withColumn("dh", graft.plans.DHashBmp(col("payload")))
       .select(col("name"), col("dh.hi").as("hi"), col("dh.lo").as("lo"),
-        col("out_w"), col("out_h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        col("out_w"), col("out_h")))
     val pairs = Dedup.hammingPairs64(geom, "name", "hi", "lo", bands, radius)
     val clusters = Dedup.connectedComponents(pairs)
     val labeled = Sampling.splitBy(geom, col("name"), trainFrac, validFrac)
@@ -118,7 +116,7 @@ object PrepPipeline {
         // downstream stages never touch quarantined rows
         when(col("hi").isNull, lit(null)).otherwise(col("out_w")).as("out_w"),
         when(col("hi").isNull, lit(null)).otherwise(col("out_h")).as("out_h"))
-    Dedup.materializeAndRelease(labeled, geom)
+    m.result(labeled)
   }
 
   /** CROSS-MODAL pair dedup — the multimodal-training dedup rule that
@@ -156,12 +154,13 @@ object PrepPipeline {
     */
   def crossModalDedup(pairs: DataFrame, pairIdCol: String, imgNameCol: String,
       binCol: String, captionCol: String, bands: Int, radius: Int,
-      n: Int, numHashes: Int, rowsPerBand: Int, threshold: Double): DataFrame = {
-    val sig = pairs.select(col(imgNameCol).as("name"), col(binCol).as("payload"))
-      .distinct()
-      .withColumn("dh", graft.plans.DHashBmp(col("payload")))
-      .select(col("name"), col("dh.hi").as("hi"), col("dh.lo").as("lo"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      n: Int, numHashes: Int, rowsPerBand: Int, threshold: Double): DataFrame =
+      Materialize { m =>
+    val sig = m.persist(
+      pairs.select(col(imgNameCol).as("name"), col(binCol).as("payload"))
+        .distinct()
+        .withColumn("dh", graft.plans.DHashBmp(col("payload")))
+        .select(col("name"), col("dh.hi").as("hi"), col("dh.lo").as("lo")))
     val iclusters = Dedup
       .connectedComponents(Dedup.hammingPairs64(sig, "name", "hi", "lo", bands, radius))
       .withColumnRenamed("cluster", "_icl")
@@ -186,27 +185,25 @@ object PrepPipeline {
         when(col("hi").isNull, lit(null))
           .otherwise(coalesce(col("_ccl"), col(pairIdCol))).as("cap_cluster"),
         col("hi").isNull.as("_quarantined"))
-    cellTail(celled, sig)
+    m.result(cellTail(celled))
   }
 
   /** The CELL rule of [[crossModalDedup]] over an already-celled relation
-    * (pair_id, img_cluster, cap_cluster, _quarantined) — factored so the
-    * scale bench (`tools.CrossModalScaleBench`) drives the exact
+    * (pair_id, img_cluster, cap_cluster, _quarantined), lazy — factored so
+    * the scale bench (`tools.CrossModalScaleBench`) drives the exact
     * production aggregation/join tail at signature level instead of a
     * re-implementation that could drift from it.
     */
-  private[graft] def cellTail(celled: DataFrame,
-      cached: DataFrame*): DataFrame = {
+  private[graft] def cellTail(celled: DataFrame): DataFrame = {
     val keep = celled.filter(!col("_quarantined"))
       .groupBy(col("img_cluster"), col("cap_cluster"))
       .agg(min(col("pair_id")).as("_keep_id"))
-    val labeled = celled
+    celled
       .join(keep, Seq("img_cluster", "cap_cluster"), "left")
       .select(col("pair_id"), col("img_cluster"), col("cap_cluster"),
         when(col("_quarantined"), "10_quarantined_undecodable")
           .when(col("pair_id") =!= col("_keep_id"), "20_dropped_dup")
           .otherwise("30_kept").as("stage"))
-    Dedup.materializeAndRelease(labeled, cached: _*)
   }
 
   /** DuckDB mirror of [[crossModalDedup]] over a parquet file of

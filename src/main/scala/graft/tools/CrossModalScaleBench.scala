@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, PrepPipeline}
+import graft.util.Materialize
 
 /** Scale curve for mm17's cross-modal (image × caption) pair dedup at
   * SIGNATURE level: the declared query is fixture-bound (9 pairs), and its
@@ -52,19 +53,16 @@ object CrossModalScaleBench {
     }
     def med(xs: Seq[Double]): Double = xs.sorted.apply(xs.length / 2)
     def r3(v: Double) = math.rint(v * 1000) / 1000
-    for (nPairs <- sizes) {
+    for (nPairs <- sizes) Materialize { m =>
       val nImgs = math.max(1L, nPairs / imgRatio)
-      val sigs = PerceptualScaleBench.sigTable(spark, nImgs, salt = 11L)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val sigs = m.persist(PerceptualScaleBench.sigTable(spark, nImgs, salt = 11L))
       sigs.count()
-      val caps = TextScaleBench.docTable(spark, nPairs, salt = 23L)
+      val caps = m.persist(TextScaleBench.docTable(spark, nPairs, salt = 23L)
         .withColumnRenamed("id", "pair_id")
-        .withColumnRenamed("text", "caption")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .withColumnRenamed("text", "caption"))
       caps.count()
-      val pairs = spark.range(nPairs)
-        .select(col("id").as("pair_id"), pmod(col("id"), lit(nImgs)).as("img_id"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val pairs = m.persist(spark.range(nPairs)
+        .select(col("id").as("pair_id"), pmod(col("id"), lit(nImgs)).as("img_id")))
       pairs.count()
       val samples = (1 to runs).map { _ =>
         timed {
@@ -85,7 +83,7 @@ object CrossModalScaleBench {
               coalesce(col("_icl"), col("img_id")).as("img_cluster"),
               coalesce(col("_ccl"), col("pair_id")).as("cap_cluster"),
               lit(false).as("_quarantined"))
-          PrepPipeline.cellTail(celled)
+          Materialize(_.result(PrepPipeline.cellTail(celled)))
             .filter(col("stage") === "20_dropped_dup").count()
         }
       }
@@ -93,7 +91,6 @@ object CrossModalScaleBench {
       println(s"""{"metric":"crossmodal_scale","pairs":$nPairs,""" +
         s""""imgs":$nImgs,"sec":${r3(med(samples.map(_._1)))},""" +
         s""""dropped_dups":$dropped}""")
-      sigs.unpersist(); caps.unpersist(); pairs.unpersist()
     }
     spark.stop()
   }

@@ -9,6 +9,7 @@ import org.apache.spark.sql.types._
 import graft.ingest.{EmbIngestPipeline, Frame}
 import graft.ingest.EmbIngestPipeline.Params
 import graft.operators.{AnnIndex, Similarity}
+import graft.util.Materialize
 
 /** The EMBEDDING ingest-loop shape at corpus scale — the m15 analog of
   * IngestScaleBench: the whole m15 foreachBatch DAG (gate → intra-batch
@@ -103,11 +104,10 @@ object EmbIngestScaleBench {
       monitorEvery = monitorEvery)
 
     def r3(v: Double) = math.rint(v * 1000) / 1000
-    for (n <- sizes) {
-      val seed = spark.createDataFrame(
+    for (n <- sizes) Materialize { scope =>
+      val seed = scope.persist(spark.createDataFrame(
           spark.range(n).rdd.map(id => Row(id, corpusVec(id))),
-          schema)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          schema))
       seed.count()
       // batches land as one parquet file each, mtime-ordered
       val src = java.nio.file.Files.createTempDirectory(
@@ -193,7 +193,6 @@ object EmbIngestScaleBench {
         s""""probe_pipeline_batch_sec":[${probe.map(r3).mkString(",")}],""" +
         stageJson + "," +
         s""""exact_admit_batch_sec":[${exact.map(r3).mkString(",")}]}""")
-      seed.unpersist()
       Seq(src, out, ckpt, idx, out2, idx2).foreach(d =>
         org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(d)))
     }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ingest.{Frame, IngestPipeline}
+import graft.util.Materialize
 
 /** The INGEST-LOOP shape at corpus scale: round 9 measured the d29 probe
   * flat at the OPERATOR level; this measures the m12 PIPELINE — the whole
@@ -79,15 +80,14 @@ object IngestScaleBench {
       targetSource = "src0", buckets = 64, driftThreshold = 1e12)
 
     def r3(v: Double) = math.rint(v * 1000) / 1000
-    for (n <- sizes) {
-      val seed = spark.range(n).select(
+    for (n <- sizes) Materialize { m =>
+      val seed = m.persist(spark.range(n).select(
           concat(lit("c"), col("id")).as("item_id"),
           col("id"))
         .map { r =>
           val (hi, lo) = seedSig(r.getLong(1))
           (r.getString(0), hi, lo)
-        }.toDF("item_id", "hi", "lo")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        }.toDF("item_id", "hi", "lo"))
       seed.count()
       // batches land as one parquet file each, mtime-ordered
       val src = java.nio.file.Files.createTempDirectory(
@@ -146,7 +146,6 @@ object IngestScaleBench {
         s""""direct_batch_sec":[${direct.map(r3).mkString(",")}],""" +
         s""""probe_batch_sec":[${probe.map(r3).mkString(",")}]}""")
       spark.sql(s"DROP TABLE IF EXISTS $tab")
-      seed.unpersist()
       org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(src))
     }
     spark.stop()

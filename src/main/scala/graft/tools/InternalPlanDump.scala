@@ -1,4 +1,5 @@
 package graft.tools
+import org.apache.spark.ListenerBusDrain
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -40,7 +41,7 @@ object InternalPlanDump {
         try {
           plans.clear()
           fn(spark, "/root/testdata/sf0.01").count()
-          Thread.sleep(800) // the listener bus is async — let it drain
+          ListenerBusDrain(spark.sparkContext)
           val all = new StringBuilder
           var i = 0
           plans.forEach { p => i += 1; all.append(s"--- plan $i ").append(p)

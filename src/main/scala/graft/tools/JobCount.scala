@@ -1,4 +1,5 @@
 package graft.tools
+import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
@@ -44,12 +45,12 @@ object JobCount {
       try {
         fn(spark, sfDir).count() // warm: codegen + JIT + any landing dirs
         spark.catalog.clearCache()
-        Thread.sleep(400) // drain listener bus (no public waitUntilEmpty)
+        ListenerBusDrain(spark.sparkContext)
         jobs.set(0); stages.set(0); tasks.set(0); taskMs.set(0)
         val t0 = System.nanoTime()
         fn(spark, sfDir).count()
         val wall = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(400) // drain listener bus before reading counters
+        ListenerBusDrain(spark.sparkContext)
         println(f"JOBCOUNT $name%-32s jobs=${jobs.get}%-4d stages=${stages.get}%-4d tasks=${tasks.get}%-6d taskSec=${taskMs.get / 1000.0}%-9.1f wall=$wall%.2f")
         spark.catalog.clearCache()
       } catch { case e: Throwable =>

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ingest.{EmbIngestPipeline, Frame, TextIngestPipeline}
 import graft.operators.{AnnIndex, Similarity}
+import graft.util.Materialize
 
 /** The m14/m15 ingest LOOPS driven over REAL data shapes — the generated
   * sf-scale `documents`/`embeddings` tables (organic near-dup rate, real
@@ -62,9 +63,8 @@ object LoopSf1Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    if (modes("text")) {
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    if (modes("text")) Materialize { scope =>
+      val docs = scope.persist(spark.read.parquet(s"$sfDir/documents.parquet"))
       val nDocs = docs.count()
       val trained = Frame.train(docs, "doc_id", "text", "source",
         targetSource = "src0", buckets = 512, driftThreshold = 20000.0)
@@ -93,13 +93,11 @@ object LoopSf1Bench {
         s""""n_docs":$nDocs,"n_batches":${probe.size},""" +
         s""""probe_batch_sec":[${probe.map(r3).mkString(",")}],""" +
         s""""direct_batch_sec":[${direct.map(r3).mkString(",")}]}""")
-      docs.unpersist()
     }
 
-    if (modes("emb")) {
-      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-        .select(col("vec_id"), col("embedding"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    if (modes("emb")) Materialize { scope =>
+      val emb = scope.persist(spark.read.parquet(s"$sfDir/embeddings.parquet")
+        .select(col("vec_id"), col("embedding")))
       val nVecs = emb.count()
       val seed = emb.filter(col("vec_id") % 5 =!= 0)
       val src = tmp("loopsf_emb_src")
@@ -147,7 +145,6 @@ object LoopSf1Bench {
         s""""exact_admit_batch_sec":[${r3(exact)}],""" +
         s""""code_files_before_compaction":$nCodeFiles,""" +
         s""""code_files_after_compaction":$nCodeFilesCompacted}""")
-      emb.unpersist()
     }
     spark.stop()
   }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
+import graft.util.Materialize
 
 /** Scale evidence for the 64-bit perceptual near-dup family (d23/d25–d28)
   * past the fixture corpus: the SIGNATURES are what the banded join sees,
@@ -128,12 +129,10 @@ object PerceptualScaleBench {
       (med(ss.map(_._1)), ss.head._2)
     }
     def r3(v: Double) = math.rint(v * 1000) / 1000
-    for (n <- sizes) {
-      val corpus = sigTable(spark, n, salt = 11L)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    for (n <- sizes) Materialize { m =>
+      val corpus = m.persist(sigTable(spark, n, salt = 11L))
       corpus.count() // materialize outside the timed region
-      val batch = batchTable(spark, batchRows, n, corpusSalt = 11L)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val batch = m.persist(batchTable(spark, batchRows, n, corpusSalt = 11L))
       batch.count()
       val (batchSec, batchPairs) = sample {
         Dedup.hammingPairs64Batch(corpus, batch, "id", "hi", "lo",
@@ -170,7 +169,6 @@ object PerceptualScaleBench {
         s""""probe_pairs":$probePairs,"self_sec":${r3(selfSec)},""" +
         s""""self_pairs":$selfPairs}""")
       spark.sql(s"DROP TABLE IF EXISTS $tab")
-      corpus.unpersist(); batch.unpersist()
     }
     spark.stop()
   }

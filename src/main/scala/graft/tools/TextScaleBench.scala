@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 import graft.operators.Dedup
+import graft.util.Materialize
 
 /** Scale curve for the TEXT incremental-dedup pair: the direct
   * batch-vs-corpus MinHash join (d12, `Dedup.incrementalDupPairs`) against
@@ -117,13 +118,11 @@ object TextScaleBench {
       (med(ss.map(_._1)), ss.head._2)
     }
     def r3(v: Double) = math.rint(v * 1000) / 1000
-    for (n <- sizes) {
-      val corpus = docTable(spark, n, salt = 11L)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    for (n <- sizes) Materialize { m =>
+      val corpus = m.persist(docTable(spark, n, salt = 11L))
       corpus.count() // materialize the TEXT outside the timed region —
       // both paths still pay their own signature/shingle work from it
-      val batch = batchTable(spark, batchDocs, n, corpusSalt = 11L)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val batch = m.persist(batchTable(spark, batchDocs, n, corpusSalt = 11L))
       batch.count()
       val (directSec, directPairs) = sample {
         Dedup.incrementalDupPairs(corpus, batch, "id", "text",
@@ -149,7 +148,6 @@ object TextScaleBench {
         s""""direct_sec":${r3(directSec)},"direct_pairs":$directPairs,""" +
         s""""probe_sec":${r3(probeSec)},"probe_pairs":$probePairs}""")
       spark.sql(s"DROP TABLE IF EXISTS $tab")
-      corpus.unpersist(); batch.unpersist()
     }
     spark.stop()
   }

@@ -67,8 +67,8 @@ class MinhashIndexSpec extends SparkSpec {
       Dedup.minhashBandIndex(corpus, "doc_id", "text", n, k, rpb)
         .repartition(4, col("bk")),
       tab, "bk", 4, Some("bk"))
-    // audit the un-checkpointed plan (materializeAndRelease otherwise
-    // collapses it to a block scan)
+    // audit the un-checkpointed plan (the operator's Materialize.result
+    // otherwise collapses it to a block scan)
     spark.conf.set("spark.graft.skipMaterialize", "true")
     try {
       val probe = Dedup.incrementalDupPairsProbe(spark.table(tab), corpus,

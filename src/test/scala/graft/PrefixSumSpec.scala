@@ -115,7 +115,7 @@ class PrefixSumSpec extends SparkSpec {
     assert(e2.getMessage.contains("bounds"))
   }
 
-  test("Gini fails loudly past the exact DECIMAL(16,0) inner-term regime") {
+  test("Gini fails loudly past the exact DECIMAL(20,0) inner-term regime") {
     // inputs quantize to DECIMAL(9,2) so maxAbs ≤ ~1e9 cents; the guard
     // regime maxAbs·n ≥ 9e15 therefore needs ~9e6 rows — constant value,
     // so the per-value counts relation is ONE row and the spec stays cheap
@@ -123,7 +123,7 @@ class PrefixSumSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException] {
       graft.operators.Gini.ofColumn(vals, "x").collect()
     }
-    assert(e.getMessage.contains("DECIMAL(16,0)"))
+    assert(e.getMessage.contains("DECIMAL(20,0)"))
   }
 
   test("KS is 0 on identical slices and large on disjoint ones") {

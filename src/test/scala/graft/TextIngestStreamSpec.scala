@@ -207,8 +207,8 @@ class TextIngestStreamSpec extends SparkSpec {
     val state = corpus.buildIndex("g_tingestspec_plan_idx", nBuckets = 4,
       through = -1L)
     val reps = Seq((7L, TextC)).toDF("doc_id", "text")
-    // audit the un-checkpointed plan (materializeAndRelease otherwise
-    // collapses the probe to a block scan)
+    // audit the un-checkpointed plan (the probe's Materialize.result
+    // otherwise collapses it to a block scan)
     spark.conf.set("spark.graft.skipMaterialize", "true")
     try {
       val pairs = corpus.admitPairs(reps, batchId = 5L, Some(state))
