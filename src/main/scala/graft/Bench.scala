@@ -88,9 +88,12 @@ object Bench {
     val envPre = probeNow()
     val samples = collection.mutable.Map.empty[String, List[Double]]
       .withDefaultValue(Nil)
+    // a query that throws in any timed run is not a timing: it leaves the
+    // medians and the total and is named in the full record's "failed"
+    val failed = collection.mutable.Set.empty[String]
     for (_ <- 1 to runs; (name, fn) <- names) {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
+      try { fn(spark, sfDir).count() } catch { case _: Throwable => failed += name }
       samples(name) ::= (System.nanoTime() - t0) / 1e9
       // hygiene OUTSIDE the timed region: no cached frames or collectable
       // garbage handed to the next query
@@ -102,10 +105,13 @@ object Bench {
       s(s.length / 2)
     }
     val envPost = probeNow()
-    val results = names.map { case (name, _) => name -> median(samples(name)) }
+    val results = names.collect { case (name, _) if !failed(name) =>
+      name -> median(samples(name)) }
     def r3(v: Double): Double = math.rint(v * 1000) / 1000
     def jmap(kvs: Seq[(String, Double)]): String =
       kvs.map { case (k, v) => "\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
+    def jlist(xs: Seq[String]): String =
+      xs.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = r3(results.map(_._2).sum)
     // stage-cost normalization: queries here are stage-count-dominated
     // (the round-7/8 drift analyses showed wall time tracking stages, not
@@ -137,14 +143,14 @@ object Bench {
     // record's "total" does NOT cover, so cross-round total comparisons
     // can't silently mix inventories.
     val ran = names.map(_._1).toSet
-    val deepExcluded = deepOnly.toSeq.sorted.filterNot(ran)
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
+    val deepExcluded = jlist(deepOnly.toSeq.filterNot(ran))
     val envFrag =
       s""","env_pre":${envJson(envPre)},"env_post":${envJson(envPost)}""" +
         s""","ref_stage_sec":${graft.tools.EnvProbe.RefStageSec}""" +
         s""","brackets_agree":$bracketsAgree""" +
         s""","value_stage_normalized":$normalized""" +
-        s""","deep_excluded":$deepExcluded"""
+        s""","deep_excluded":$deepExcluded""" +
+        s""","failed":${jlist(failed.toSeq)}"""
     val full =
       s"""{"metric":"total","value":$total,"unit":"sec","runs":$runs$envFrag,"queries":${jmap(results)},"sf":"$sfDir"}"""
     // the complete per-query record, printed first and optionally filed

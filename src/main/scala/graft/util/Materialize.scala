@@ -20,14 +20,11 @@ import org.apache.spark.storage.StorageLevel
   * A plain return releases only (scalar results, frames that are already
   * materialized). A checkpoint is released by unpersisting its RDD:
   * `Dataset.unpersist` consults only the cache manager, which never saw
-  * it. Under `spark.graft.skipMaterialize=true` (the plan audits)
-  * [[result]] returns its frame lazily and the scope keeps its caches, so
-  * an audit sees the real plan instead of a block scan.
+  * it.
   */
 final class Materialize private {
   private val persisted = ArrayBuffer.empty[DataFrame]
   private val checkpoints = ArrayBuffer.empty[RDD[_]]
-  private var keep = false
 
   /** `df` persisted (memory and disk) until the scope exits. */
   def persist(df: DataFrame): DataFrame = {
@@ -48,14 +45,9 @@ final class Materialize private {
   /** `df` computed now into an eager local checkpoint, so the release
     * cannot reach what it reads.
     */
-  def result(df: DataFrame): DataFrame =
-    if (df.sparkSession.conf.getOption("spark.graft.skipMaterialize")
-        .contains("true")) {
-      keep = true
-      df
-    } else df.localCheckpoint(eager = true)
+  def result(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
 
-  private def release(): Unit = if (!keep) {
+  private def release(): Unit = {
     persisted.foreach(_.unpersist())
     checkpoints.foreach(_.unpersist(blocking = false))
   }

@@ -1,10 +1,7 @@
 package graft
 
-import scala.collection.concurrent.TrieMap
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-
 import graft.operators.Coreset
+import graft.tools.Inspect
 
 /** Plan-shape guard for kCenterSample: the whole k-round selection must run
   * WITHOUT shuffling the corpus — every round is a narrow constant-centers
@@ -24,24 +21,14 @@ class CoresetPlanSpec extends SparkSpec {
     val df = data.toDF("id", "vec")
     df.count() // settle any input-side work before listening
 
-    val shuffleBytes = TrieMap.empty[Int, Long]
-    val listener = new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-        shuffleBytes(e.stageInfo.stageId) =
-          e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten
+    // collect(), not count(): count()'s own final-agg exchange would be
+    // attributed to the operator
+    val r = Inspect.run(spark) {
+      assert(Coreset.kCenterSample(df, "id", "vec", dim = 16, k = 6)
+        .collect().length == 6)
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // collect(), not count(): count()'s own final-agg exchange would be
-      // attributed to the operator
-      val got = Coreset.kCenterSample(df, "id", "vec", dim = 16, k = 6)
-      assert(got.collect().length == 6)
-      // bus delivery is async: drain it before asserting
-      org.apache.spark.ListenerBusDrain(spark.sparkContext)
-      assert(shuffleBytes.nonEmpty, "listener saw no stages")
-      val total = shuffleBytes.values.sum
-      assert(total == 0L,
-        s"kCenterSample shuffled $total bytes across stages $shuffleBytes")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(r.stages > 0, "listener saw no stages")
+    assert(r.shuffleWriteBytes == 0L,
+      s"kCenterSample shuffled ${r.shuffleWriteBytes} bytes across ${r.stages} stages")
   }
 }

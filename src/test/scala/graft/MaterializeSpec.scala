@@ -66,20 +66,4 @@ class MaterializeSpec extends SparkSpec {
     assert(out.count() == 7)
     assert(out.agg(sum(col("count"))).first().getLong(0) == 1000L)
   }
-
-  test("skipMaterialize: result stays lazy and the scope keeps its caches") {
-    spark.catalog.clearCache()
-    spark.conf.set("spark.graft.skipMaterialize", "true")
-    try {
-      val out = Materialize { m =>
-        m.result(m.persist(spark.range(0, 10).toDF("id")).filter(col("id") > 4))
-      }
-      assert(!out.queryExecution.logical.isInstanceOf[LogicalRDD])
-      assert(!ColumnBridge.noCachedRelations(spark))
-      assert(out.count() == 5)
-    } finally {
-      spark.conf.unset("spark.graft.skipMaterialize")
-      spark.catalog.clearCache()
-    }
-  }
 }

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
+import graft.tools.Inspect
 
 /** The persisted MinHash band index + probe (d30) — the text-side analog
   * of the d29 perceptual band index: probe ≡ the direct incremental join,
@@ -67,17 +68,14 @@ class MinhashIndexSpec extends SparkSpec {
       Dedup.minhashBandIndex(corpus, "doc_id", "text", n, k, rpb)
         .repartition(4, col("bk")),
       tab, "bk", 4, Some("bk"))
-    // audit the un-checkpointed plan (the operator's Materialize.result
-    // otherwise collapses it to a block scan)
-    spark.conf.set("spark.graft.skipMaterialize", "true")
-    try {
-      val probe = Dedup.incrementalDupPairsProbe(spark.table(tab), corpus,
-        batch, "doc_id", "text", n, k, rpb, thr)
-      probe.count()
-      val plan = probe.queryExecution.executedPlan.toString
-      assert(plan.contains("Bucketed: true"),
-        s"band-index scan must be bucketed:\n$plan")
-    } finally spark.conf.unset("spark.graft.skipMaterialize")
+    // the probe runs inside the operator's eager localCheckpoint
+    val r = Inspect.run(spark) {
+      Dedup.incrementalDupPairsProbe(spark.table(tab), corpus,
+        batch, "doc_id", "text", n, k, rpb, thr).count()
+    }
+    val plan = checkpointedPlans(r)
+    assert(plan.contains("Bucketed: true"),
+      s"band-index scan must be bucketed:\n$plan")
   }
 
   test("fold-in compaction: appended docs' bands extend coverage, layout intact") {

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
+import graft.tools.Inspect
+
 /** Physical-plan regression guards: correctness tests prove WHAT each query
   * computes; these prove HOW — the plan properties that make the queries
   * survive 100 TB. A refactor that silently turns a broadcast join into a
@@ -277,16 +279,15 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("d23: pigeonhole Hamming pairs is a bucketed equi-join, never all-pairs") {
-    // bypass the entry point's eager materialization so the real plan shows
-    spark.conf.set("spark.graft.skipMaterialize", "true")
-    try {
-      val docs = spark.read.parquet(s"$sf/documents.parquet")
-      val df = graft.operators.Dedup.simhashHammingPairs(
-        docs, "doc_id", "text", bits = 32, bands = 4, radius = 3)
-      val plan = finalPlanString(df)
-      assert(!plan.contains("CartesianProduct") &&
-        !plan.contains("BroadcastNestedLoopJoin"),
-        s"candidate generation must stay an equi-join:\n$plan")
-    } finally spark.conf.unset("spark.graft.skipMaterialize")
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    // the pair generation runs inside the operator's eager localCheckpoint
+    val r = Inspect.run(spark) {
+      graft.operators.Dedup.simhashHammingPairs(
+        docs, "doc_id", "text", bits = 32, bands = 4, radius = 3).count()
+    }
+    val plan = checkpointedPlans(r)
+    assert(!plan.contains("CartesianProduct") &&
+      !plan.contains("BroadcastNestedLoopJoin"),
+      s"candidate generation must stay an equi-join:\n$plan")
   }
 }

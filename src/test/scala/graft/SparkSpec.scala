@@ -17,6 +17,16 @@ trait SparkSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
+  /** Every captured action's final plan, in order, once the capture is
+    * shown to hold a `localCheckpoint` — so an audit of a checkpointed
+    * operator cannot pass on a capture that missed it.
+    */
+  def checkpointedPlans(r: graft.tools.Inspect.Report): String = {
+    assert(r.actions.exists(_.name == "localCheckpoint"),
+      s"no localCheckpoint captured: ${r.actions.map(_.name)}")
+    r.actions.map(_.plan.toString).mkString("\n")
+  }
+
   def tmpDir(name: String): String = {
     val d = java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get("target"), name)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ingest.{Frame, TextIngestPipeline}
+import graft.tools.Inspect
 
 /** The m14 TEXT pipeline as a STREAM with a mid-stream kill/restart —
   * the text twin of IngestStreamSpec: the checkpoint replays the
@@ -206,17 +207,18 @@ class TextIngestStreamSpec extends SparkSpec {
     val corpus = textCorpus(out)
     val state = corpus.buildIndex("g_tingestspec_plan_idx", nBuckets = 4,
       through = -1L)
-    val reps = Seq((7L, TextC)).toDF("doc_id", "text")
-    // audit the un-checkpointed plan (the probe's Materialize.result
-    // otherwise collapses it to a block scan)
-    spark.conf.set("spark.graft.skipMaterialize", "true")
-    try {
-      val pairs = corpus.admitPairs(reps, batchId = 5L, Some(state))
-      pairs.count() // settle AQE
-      val plan = pairs.queryExecution.executedPlan.toString
-      assert(plan.contains("Bucketed: true"),
-        s"the admit probe must scan the band index bucket-aligned:\n$plan")
-    } finally spark.conf.unset("spark.graft.skipMaterialize")
+    // a rep that hits the index (seed doc 100): AQE replaces an empty
+    // probe's final plan with an EmptyRelation, which shows no scan
+    val reps = Seq((7L, TextA)).toDF("doc_id", "text")
+    var hits = 0L
+    // the probe runs inside its eager localCheckpoint
+    val r = Inspect.run(spark) {
+      hits = corpus.admitPairs(reps, batchId = 5L, Some(state)).count()
+    }
+    assert(hits > 0, "the audited probe must find its seed copy")
+    val plan = checkpointedPlans(r)
+    assert(plan.contains("Bucketed: true"),
+      s"the admit probe must scan the band index bucket-aligned:\n$plan")
   }
 
   test("a zero-token text batch lands a drifted=NULL verdict instead of wedging") {
