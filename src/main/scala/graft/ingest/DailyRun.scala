@@ -13,7 +13,9 @@ import graft.sources.HtmlTable
   *   3. per pending commodity: parse the summary table, classify it
   *      (single vs multi container, A2/A3), branch to the matching flow,
   *      land each scraped table in the partitioned raw layer (EP3),
-  *   4. commit the commodity's link types to the ledger (ST2).
+  *   4. commit the commodity's link types to the ledger (ST2): one parquet
+  *      file written on the driver under a hidden name, then renamed into
+  *      place — no Spark job, and all of the commit or none of it is seen.
   *
   * Re-running the same day is a no-op: completed commodities are pruned by
   * the ledger and the raw sink overwrites its own partitions. Failures

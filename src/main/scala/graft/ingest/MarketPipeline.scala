@@ -1,8 +1,17 @@
 package graft.ingest
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import java.util.UUID
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.simple.SimpleGroup
+import org.apache.parquet.hadoop.ParquetFileWriter
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.schema.MessageType
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, StringType, StructField, StructType}
 
 import graft.functions.NameFns
 
@@ -29,9 +38,11 @@ final case class MarketRecord(
   * partition overwrite → re-running a batch is a no-op (ST1/ST2).
   *
   * Scale notes: the raw sink partitions on low-cardinality keys so writes
-  * are append-only file adds; the ledger stays tiny (one row per commodity ×
-  * link_type × day) and is broadcast in the anti-join; normalization is a
-  * pure narrow projection (no shuffle).
+  * are append-only file adds; normalization is a pure narrow projection (no
+  * shuffle). The ledger stays tiny (one row per commodity × link_type × day)
+  * and is broadcast in the anti-join. A ledger commit runs no Spark job: it
+  * is a driver-side parquet file create plus a rename. The ledger read
+  * uses a fixed schema, so it runs no schema-inference job either.
   */
 object MarketPipeline {
 
@@ -260,32 +271,78 @@ object MarketPipeline {
     }
 
   // ---- completed-commodities ledger (SRC6/SNK3, F4, F5) ----------------
+  // One unpartitioned directory of small parquet files, one per commit,
+  // on any Hadoop filesystem (local, hdfs, s3a). A commit is a driver-side
+  // file create plus rename (no Spark job); the read uses a fixed schema
+  // (no inference job).
 
-  /** Append a completion record (commodity, link_type, scrape_date). */
+  /** Every ledger file's columns, all STRING: the read schema, and (as
+    * `LedgerParquetSchema`) the schema each commit writes.
+    */
+  val LedgerSchema: StructType = StructType(
+    Seq("commodity", "link_type", "scrape_date").map(StructField(_, StringType)))
+
+  /** `LedgerSchema` as Spark's own parquet writer lays it out
+    * (`optional binary … (STRING)`), so files of either writer read alike.
+    */
+  private val LedgerParquetSchema: MessageType =
+    new SparkToParquetSchemaConverter().convert(LedgerSchema)
+
+  /** Commit a completion record: one row (commodity, link_type,
+    * scrape_date) per link type, as one parquet file in `ledgerPath`.
+    *
+    * The file is written under a hidden name,
+    * `.part-<uuid>.parquet.inprogress`, which Spark's file listing skips,
+    * then renamed to `part-<uuid>.parquet`. Readers see all of a commit or
+    * none of it: a commit killed before the rename leaves only a hidden
+    * file, and the commodity stays pending. A rename that returns false
+    * throws, so a completion is never lost silently. On any failure the
+    * hidden file is deleted, then the failure is rethrown.
+    *
+    * Empty `linkTypes` writes no file; readers see the same ledger either
+    * way. A retried commit writes a second file; `readLedger`'s set read
+    * dedups it.
+    */
   def recordCompleted(spark: SparkSession, ledgerPath: String,
-      commodity: String, linkTypes: Seq[String], scrapeDate: String): Unit = {
-    import spark.implicits._
-    linkTypes.map(t => (commodity, t, scrapeDate))
-      .toDF("commodity", "link_type", "scrape_date")
-      .write.mode(SaveMode.Append).parquet(ledgerPath)
-  }
+      commodity: String, linkTypes: Seq[String], scrapeDate: String): Unit =
+    if (linkTypes.nonEmpty) {
+      // the reader's Hadoop conf, so session-level fs settings (s3a keys)
+      // reach the commit too
+      val conf = spark.sessionState.newHadoopConf()
+      val dir = new Path(ledgerPath)
+      val fs = dir.getFileSystem(conf)
+      val name = s"part-${UUID.randomUUID()}.parquet"
+      val tmp = new Path(dir, s".$name.inprogress")
+      try {
+        val out = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(tmp, conf))
+          .withType(LedgerParquetSchema).withConf(conf)
+          .withWriteMode(ParquetFileWriter.Mode.CREATE).build()
+        try linkTypes.foreach(t => out.write(new SimpleGroup(LedgerParquetSchema)
+          .append("commodity", commodity).append("link_type", t)
+          .append("scrape_date", scrapeDate)))
+        finally out.close()
+        if (!fs.rename(tmp, new Path(dir, name)))
+          throw new java.io.IOException(s"ledger commit: rename of $tmp to $name failed")
+      } catch {
+        case e: Throwable =>
+          try fs.delete(tmp, false) catch { case d: Exception => e.addSuppressed(d) }
+          throw e
+      }
+    }
 
   /** The deduplicated ledger: commodity → set of completed link types.
     * A missing or still-empty ledger directory reads as an empty ledger
     * (first run of the day).
     */
   def readLedger(spark: SparkSession, ledgerPath: String, scrapeDate: String): DataFrame = {
-    import spark.implicits._
     // probe through Spark's reader, not java.io.File — the ledger may live
     // on any Hadoop filesystem (s3a/hdfs), where a local-file check would
     // silently report an existing ledger as empty
     val entries =
-      try spark.read.parquet(ledgerPath)
+      try spark.read.schema(LedgerSchema).parquet(ledgerPath)
       catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getErrorClass == "PATH_NOT_FOUND" ||
-              e.getErrorClass == "UNABLE_TO_INFER_SCHEMA" =>
-          Seq.empty[(String, String, String)].toDF("commodity", "link_type", "scrape_date")
+        case e: AnalysisException if e.getErrorClass == "PATH_NOT_FOUND" =>
+          spark.createDataFrame(java.util.List.of[Row](), LedgerSchema)
       }
     entries
       .filter(col("scrape_date") === scrapeDate)

@@ -430,12 +430,13 @@ object MarketQueries {
              |FROM lineitem GROUP BY 1""".stripMargin)),
 
     // SNK3 (completed-ledger upsert) as an oracle row: completion records
-    // land APPEND-ONLY (recordCompleted's shape), the same batch written
-    // twice — a retried run — and readLedger's set-dedup read proves the
-    // upsert is idempotent: the oracle computes the single-write answer
-    // directly from orders, so the hash match IS the "re-run is a no-op"
-    // claim. At 100 TB the ledger read stays one groupBy over a
-    // date-filtered slice of a small control table.
+    // land APPEND-ONLY through Spark's writer (the ledger's older file
+    // shape, which readLedger's fixed schema still reads), the same batch
+    // written twice — a retried run — and readLedger's set-dedup read
+    // proves the upsert is idempotent: the oracle computes the
+    // single-write answer directly from orders, so the hash match IS the
+    // "re-run is a no-op" claim. At 100 TB the ledger read stays one
+    // groupBy over a date-filtered slice of a small control table.
     Q("m10_ledger_idempotent_upsert",
       (s, dir) => {
         val t = Tables(s, dir)

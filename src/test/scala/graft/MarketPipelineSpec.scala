@@ -1,9 +1,19 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
 import org.apache.spark.sql.functions._
 
 import graft.ingest.MarketPipeline
 import graft.sources.HtmlTable
+import graft.tools.Inspect
+
+/** A local file system whose rename always reports failure. */
+class RenameFailsFileSystem extends RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("renamefails:///")
+  override def rename(src: Path, dst: Path): Boolean = false
+}
 
 /** End-to-end EP3 pipeline (SURVEY.md §3): parse → enrich → classify →
   * filter → normalize → partitioned sink, plus the incremental ledger
@@ -161,5 +171,92 @@ class MarketPipelineSpec extends SparkSpec {
     // re-recording is idempotent (collect_set dedups)
     recordCompleted(spark, ledger, "apples", expected, "2026-08-12")
     assert(MarketPipeline.pending(all, spark, ledger, "2026-08-12", expected).count() == 2)
+  }
+
+  val day = "2026-08-12"
+  val expectedTypes: Seq[String] = Seq("summary", "container", "variety")
+
+  def pendingNames(ledger: String, units: String*): Seq[String] = {
+    import spark.implicits._
+    MarketPipeline.pending(units.toDF("commodity"), spark, ledger, day, expectedTypes)
+      .orderBy("commodity").collect().map(_.getString(0)).toSeq
+  }
+
+  def ledgerSets(ledger: String): Map[String, Set[String]] =
+    readLedger(spark, ledger, day).collect()
+      .map(r => r.getString(0) -> r.getSeq[String](1).toSet).toMap
+
+  test("a ledger commit runs no Spark job; pending is one SQL action") {
+    val ledger = tmpDir("ledger_jobs")
+    val commit = Inspect.run(spark) {
+      recordCompleted(spark, ledger, "apples", expectedTypes, "2026-08-10")
+    }
+    assert(commit.jobs == 0 && commit.actions.isEmpty)
+    recordCompleted(spark, ledger, "apples", expectedTypes, "2026-08-11")
+    recordCompleted(spark, ledger, "apples", expectedTypes, day)
+    var got = Seq.empty[String]
+    val read = Inspect.run(spark) { got = pendingNames(ledger, "apples", "pears") }
+    assert(got == Seq("pears"))
+    assert(read.actions.map(_.name) == Seq("collect"))
+    info(s"pending over a three-day ledger: ${read.jobs} jobs")
+    // empty link types commit nothing, so no file is written
+    val before = new java.io.File(ledger).list().toSet
+    recordCompleted(spark, ledger, "pears", Nil, day)
+    assert(new java.io.File(ledger).list().toSet == before)
+  }
+
+  test("a commit killed before its rename leaves the commodity pending") {
+    val whole = tmpDir("ledger_whole")
+    recordCompleted(spark, whole, "apples", expectedTypes, day)
+    val part = new java.io.File(whole).listFiles().filter(_.getName.startsWith("part-"))
+    assert(part.length == 1 && part.head.getName.endsWith(".parquet"))
+    val bytes = Files.readAllBytes(part.head.toPath)
+    // the writer died mid-file: only a hidden, truncated file is left
+    val ledger = tmpDir("ledger_killed")
+    Files.write(Paths.get(ledger, ".part-x.parquet.inprogress"), bytes.take(bytes.length / 2))
+    assert(ledgerSets(ledger).isEmpty)
+    assert(pendingNames(ledger, "apples", "pears") == Seq("apples", "pears"))
+    recordCompleted(spark, ledger, "pears", expectedTypes, day)
+    assert(pendingNames(ledger, "apples", "pears") == Seq("apples"))
+    // the retried commit completes it
+    recordCompleted(spark, ledger, "apples", expectedTypes, day)
+    assert(pendingNames(ledger, "apples", "pears").isEmpty)
+  }
+
+  test("a commit whose rename fails throws and leaves no file") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.renamefails.impl", classOf[RenameFailsFileSystem].getName)
+    val dir = tmpDir("ledger_rename")
+    val ledger = s"renamefails://${new java.io.File(dir).getAbsolutePath}"
+    val e = intercept[java.io.IOException] {
+      recordCompleted(spark, ledger, "apples", expectedTypes, day)
+    }
+    assert(e.getMessage.contains("rename"))
+    assert(new java.io.File(dir).list().isEmpty)
+  }
+
+  test("Spark-appended ledger files and commits read as one ledger") {
+    import spark.implicits._
+    // the ledger's older file shape: Spark appends, one job each
+    def sparkAppend(ledger: String, rows: (String, String, String)*): Unit =
+      rows.toDF("commodity", "link_type", "scrape_date").write.mode("append").parquet(ledger)
+    val mixed = tmpDir("ledger_mixed")
+    sparkAppend(mixed, ("apples", "summary", day), ("apples", "container", day),
+      ("plums", "summary", "2026-08-11"))
+    recordCompleted(spark, mixed, "apples", Seq("variety", "summary"), day)
+    recordCompleted(spark, mixed, "pears", Seq("summary"), day)
+    assert(ledgerSets(mixed) == Map(
+      "apples" -> Set("summary", "container", "variety"), "pears" -> Set("summary")))
+    assert(pendingNames(mixed, "apples", "pears", "plums") == Seq("pears", "plums"))
+    // the same records through either writer read the same
+    val viaSpark = tmpDir("ledger_spark")
+    sparkAppend(viaSpark, expectedTypes.map(t => ("apples", t, day)): _*)
+    val viaCommit = tmpDir("ledger_commit")
+    recordCompleted(spark, viaCommit, "apples", expectedTypes, day)
+    assert(ledgerSets(viaSpark) == ledgerSets(viaCommit))
+    assert(spark.read.parquet(viaSpark).schema == spark.read.parquet(viaCommit).schema)
+    // an empty directory and a missing path both read as empty
+    assert(ledgerSets(tmpDir("ledger_empty")).isEmpty)
+    assert(ledgerSets(s"$mixed/missing").isEmpty)
   }
 }
