@@ -1,129 +1,127 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.TextFns
-import graft.util.Materialize
 
 /** Byte-pair-encoding merge training INSIDE the engine — the tokenizer-
-  * construction pass of an LLM data pipeline run as a distributed
-  * aggregation loop instead of a single-node script.
+  * construction pass of an LLM data pipeline.
   *
   * Classic BPE over word types: every distinct word (whitespace token)
   * starts as its character sequence; each step counts adjacent symbol
   * pairs across the corpus weighted by word frequency (overlapping
   * occurrences counted, the standard convention), merges the most frequent
   * pair everywhere (greedy left-to-right within each word), and records
-  * it. Ties break lexicographically on (left, right) so the merge table is
-  * a pure function of the corpus.
+  * it. Ties break on (left, right) in UTF-8 byte order — the string order
+  * of Spark and DuckDB — so the merge table is a pure function of the
+  * corpus.
   *
-  * Scale shape: the loop body is ONE aggregation over the word-TYPE
-  * relation (|vocab| rows — millions at web scale, never corpus-sized)
-  * plus a 1-row driver round trip per step (the same iteration shape as
-  * KMeans/MLlib); the merge rewrite is a narrow higher-order-function
-  * projection, zero shuffle. Per-step `localCheckpoint` cuts the growing
-  * lineage. Production BPE at 50k merges adds the pair-count delta cache
-  * (only pairs touching a merged symbol change); this direct form is the
-  * oracle-replayable reference.
+  * Scale shape: the corpus-sized part is distributed — explode the tokens
+  * and count each word TYPE. That |vocab|-row relation goes through one
+  * shuffle into a single partition, and one task runs all the merge steps
+  * in memory (step k's counts depend on step k-1's rewrite, so the steps
+  * are sequential anyway): one action and a fixed job count for any number
+  * of steps, not a planned aggregation plus a driver round trip per step
+  * (t26's count: 3 jobs, was 23 for 10 steps). Memory
+  * bound: the one task holds the whole word-type relation and one step's
+  * pair counts. Each step recounts every pair; production BPE at 50k
+  * merges adds a pair-count delta index (recount only the words holding
+  * the merged pair).
   */
 object Bpe {
 
-  /** Greedy left-to-right merge of adjacent (a, b) into a single symbol —
-    * a fold carrying (prev, out): overlapping matches resolve exactly like
-    * the sequential scan ("aaa" + (a,a) → ["aa", "a"]).
+  /** Greedy left-to-right merge of adjacent (a, b) into a single symbol:
+    * overlapping matches resolve like a sequential scan ("aaa" + (a,a) →
+    * ["aa", "a"]).
     */
-  def mergePair(c: Column, a: String, b: String): Column = {
-    val init = struct(lit(null).cast("string").as("prev"),
-      array().cast("array<string>").as("out"))
-    aggregate(
-      c, init,
-      (acc, s) => {
-        val prev = acc.getField("prev")
-        val out = acc.getField("out")
-        when(prev.isNull, struct(s.as("prev"), out.as("out")))
-          .when(prev === lit(a) && s === lit(b),
-            struct(lit(null).cast("string").as("prev"),
-              concat(out, array(lit(a + b))).as("out")))
-          .otherwise(struct(s.as("prev"), concat(out, array(prev)).as("out")))
-      },
-      acc => when(acc.getField("prev").isNull, acc.getField("out"))
-        .otherwise(concat(acc.getField("out"), array(acc.getField("prev")))))
+  def mergePair(syms: Seq[String], a: String, b: String): IndexedSeq[String] = {
+    val s = syms.toIndexedSeq
+    val out = Vector.newBuilder[String]
+    var i = 0
+    while (i < s.length) {
+      if (i + 1 < s.length && s(i) == a && s(i + 1) == b) { out += a + b; i += 2 }
+      else { out += s(i); i += 1 }
+    }
+    out.result()
   }
 
   /** The word-type relation (w, freq, syms) a merge chain starts from. */
-  private def wordTypes(df: DataFrame, textCol: String): DataFrame =
+  private[graft] def wordTypes(df: DataFrame, textCol: String): DataFrame =
     df.select(explode(TextFns.tokens(col(textCol))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
       .withColumn("syms", split(col("w"), ""))
 
-  /** Adjacent-pair counts of the current segmentation, frequency-weighted. */
-  private def pairCounts(syms: DataFrame): DataFrame =
-    syms.filter(size(col("syms")) >= 2)
-      .select(col("freq"),
-        explode(sequence(lit(0), size(col("syms")) - 2)).as("i"),
-        col("syms"))
-      .select(col("freq"),
-        element_at(col("syms"), col("i") + 1).as("a"),
-        element_at(col("syms"), col("i") + 2).as("b"))
-      .groupBy(col("a"), col("b")).agg(sum(col("freq")).as("cnt"))
+  /** One row of the training task: a merge (`step` >= 1) or a trained
+    * word (`step` = 0).
+    */
+  private[graft] final case class Trained(step: Int, left_sym: String,
+      right_sym: String, pair_count: Long, w: String, freq: Long,
+      syms: Seq[String])
 
-  /** Train `steps` merges; returns (step, left, right, pair_count) — the
-    * merge table in training order, plus the trained word-type relation
-    * for callers that want to encode with it (`trainState`).
+  private def utf8(s: String): UTF8String = UTF8String.fromString(s)
+
+  /** Pair-count rank: count desc, then left and right ascending in UTF-8
+    * byte order — `String.compareTo`'s UTF-16 order differs above U+FFFF.
+    */
+  private val Rank: Ordering[((String, String), Long)] = (x, y) => {
+    val c = java.lang.Long.compare(y._2, x._2)
+    if (c != 0) c
+    else {
+      val l = utf8(x._1._1).binaryCompare(utf8(y._1._1))
+      if (l != 0) l else utf8(x._1._2).binaryCompare(utf8(y._1._2))
+    }
+  }
+
+  /** The whole training loop over one partition of word types: the merge
+    * rows in step order, then the trained words.
+    */
+  private def train(words: Iterator[(String, Long, Seq[String])],
+      steps: Int): Iterator[Trained] = {
+    var ws = words.map { case (w, f, s) => (w, f, s.toIndexedSeq) }.toVector
+    val merges = Vector.newBuilder[Trained]
+    var step = 1
+    var exhausted = false
+    while (step <= steps && !exhausted) {
+      val counts = mutable.HashMap.empty[(String, String), Long]
+      for ((_, f, s) <- ws; i <- 0 until s.length - 1) {
+        val p = (s(i), s(i + 1))
+        counts(p) = counts.getOrElse(p, 0L) + f
+      }
+      if (counts.isEmpty) exhausted = true
+      else {
+        val ((a, b), n) = counts.min(Rank)
+        merges += Trained(step, a, b, n, null, 0L, null)
+        ws = ws.map { case (w, f, s) => (w, f, mergePair(s, a, b)) }
+        step += 1
+      }
+    }
+    (merges.result() ++ ws.map { case (w, f, s) =>
+      Trained(0, null, null, 0L, w, f, s) }).iterator
+  }
+
+  /** Train `steps` merges; returns (step, left_sym, right_sym, pair_count),
+    * the merge table in training order.
     */
   def trainMerges(df: DataFrame, textCol: String, steps: Int): DataFrame =
     trainState(df, textCol, steps)._1
 
+  /** The merge table and the trained word-type segmentation (w, freq,
+    * syms): two projections of ONE training task, so reading both runs
+    * the task twice.
+    */
   def trainState(df: DataFrame, textCol: String,
-      steps: Int): (DataFrame, DataFrame) = Materialize { m =>
+      steps: Int): (DataFrame, DataFrame) = {
     val spark = df.sparkSession
     import spark.implicits._
-    // Round-12 A/B, examined and left alone: the loop runs 2 jobs/step
-    // under AQE (shuffle stage + result) — scoping AQE OFF for the loop
-    // halves the jobs (23→12 for t26) but un-coalesces each step's
-    // pair-counts shuffle to the session's full partition count
-    // (tasks 32→652, wall 2.35→2.73 s at sf0.1): AQE's extra per-step job
-    // is cheaper than the tiny-task storm it prevents, locally and on a
-    // cluster alike. The 10 sequential driver round trips are the
-    // algorithm's inherent depth (step k's counts depend on step k-1's
-    // rewrite); the encode side is already a single hash join on the
-    // trained word types, not a per-rule join chain.
-    // LAZY checkpoints: each step needs syms materialized anyway to pick
-    // its top pair, so let THAT collect do the materialization instead of
-    // paying a second job per step for an eager checkpoint (measured:
-    // 2 jobs/step -> 1, t26/t31 ~25-30% faster; the lineage truncation is
-    // identical). The previous step goes to the scope (released on return)
-    // only AFTER the collect has materialized the current step (a lazy
-    // checkpoint still reads its parent on first compute — releasing the
-    // parent first would fail on the dropped blocks).
-    var syms = wordTypes(df, textCol).localCheckpoint(eager = false)
-    var prev: DataFrame = null
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    var step = 1
-    var exhausted = false
-    while (step <= steps && !exhausted) {
-      val top = pairCounts(syms)
-        .orderBy(col("cnt").desc, col("a").asc, col("b").asc)
-        .limit(1).collect()
-      if (prev != null) m.adopt(prev)
-      if (top.isEmpty) exhausted = true
-      else {
-        val (a, b, cnt) =
-          (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        merges += ((step, a, b, cnt))
-        val next = syms.withColumn("syms", mergePair(col("syms"), a, b))
-          .localCheckpoint(eager = false)
-        prev = syms
-        syms = next
-        step += 1
-      }
-    }
-    // the final state is handed back lazy; the caller's first action
-    // (encode join / merge-table display) materializes it once. Neither it
-    // nor an un-adopted `prev` is released here — the returned frame still
-    // depends on them until that first action runs.
-    (merges.toSeq.toDF("step", "left_sym", "right_sym", "pair_count"), syms)
+    val trained = wordTypes(df, textCol).repartition(1)
+      .as[(String, Long, Seq[String])].mapPartitions(train(_, steps))
+    (trained.filter(col("step") > 0)
+      .select("step", "left_sym", "right_sym", "pair_count"),
+     trained.filter(col("step") === 0).select("w", "freq", "syms"))
   }
 
   /** Per-document BPE token counts under the corpus's own trained merge
@@ -133,7 +131,7 @@ object Bpe {
     * join on the word — at 100 TB the vocabulary relation is millions of
     * rows (shuffle-joinable, AQE broadcasts when small) while the corpus
     * itself only explodes to (doc, word) and re-aggregates, never
-    * re-running the merge fold per occurrence.
+    * re-running the merge per occurrence.
     */
   def encodeCounts(df: DataFrame, idCol: String, textCol: String,
       steps: Int): DataFrame = {

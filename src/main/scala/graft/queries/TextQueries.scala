@@ -504,9 +504,9 @@ object TextQueries {
         "documents", "doc_id", "text", width = 20, maxDocs = 1))),
 
     // BPE merge training (operators/Bpe): the tokenizer-construction pass
-    // run as a distributed aggregation loop — 10 merges trained on the
-    // corpus' word-frequency table, ties broken lexicographically so the
-    // merge table is a pure function of the corpus. The oracle replays all
+    // — a distributed word-frequency count, then all 10 merges trained in
+    // one task over that table, ties broken on (left, right) in UTF-8 byte
+    // order so the merge table is a pure function of the corpus. The oracle replays all
     // 10 steps (pair counts → top pick → greedy left-to-right rewrite as
     // gaps-and-islands) and must land on the identical table.
     Q("t26_bpe_merges",
@@ -569,10 +569,10 @@ object TextQueries {
 
     // Tokenizer APPLY: per-document BPE token counts under the corpus's
     // own t26-trained merge table (Bpe.encodeCounts). Each word TYPE is
-    // segmented once; per-occurrence cost is a vocabulary hash join — the
-    // token-budget accounting pass (packing, pricing, context-window fit)
-    // of an LLM pipeline, engine-exact against a full DuckDB replay of the
-    // training chain plus the encode join.
+    // segmented once, by t26's training task; per-occurrence cost is a
+    // vocabulary hash join — the token-budget accounting pass (packing,
+    // pricing, context-window fit) of an LLM pipeline, engine-exact against
+    // a full DuckDB replay of the training chain plus the encode join.
     Q("t31_bpe_encode",
       (s, dir) => graft.operators.Bpe.encodeCounts(
         Tables(s, dir).documents, "doc_id", "text", steps = 10),

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.operators.Bpe
 
 /** BPE merge training: greedy-rewrite semantics, tie-breaks, and the
@@ -11,10 +9,8 @@ class BpeSpec extends SparkSpec {
   import spark.implicits._
 
   test("mergePair is greedy left-to-right (overlap resolves like a scan)") {
-    val df = Seq(Seq("a", "a", "a"), Seq("a", "a", "a", "a"), Seq("x"),
-      Seq.empty[String]).toDF("syms")
-    val out = df.select(Bpe.mergePair(col("syms"), "a", "a").as("m"))
-      .collect().map(_.getSeq[String](0))
+    val out = Seq(Seq("a", "a", "a"), Seq("a", "a", "a", "a"), Seq("x"),
+      Seq.empty[String]).map(Bpe.mergePair(_, "a", "a"))
     assert(out(0) == Seq("aa", "a"))
     assert(out(1) == Seq("aa", "aa"))
     assert(out(2) == Seq("x"))
