@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sources.HtmlTable
+import graft.util.LocalFs
 
 /** EP2 — the reference's per-commodity daily loop
   * (scraper/div_link_handler.py:460-567) as a batch orchestrator:
@@ -99,17 +100,19 @@ object DailyRun {
     * path-derived metadata (commodity/link_type), page-date fallback,
     * positional header binding, totals filter. Pure narrow projections.
     */
-  def normalizeParsedPages(parsed: DataFrame, scrapeDate: String): DataFrame = {
-    val typed = MarketPipeline.fromParsedPages(parsed)
-      .withColumn("commodity",
-        regexp_extract(col("page_path"), "([^/]+)/[^/]+$", 1))
-      .withColumn("link_type",
-        regexp_extract(col("page_path"), "([^/]+)\\.html$", 1))
-      .withColumn("scrape_date", coalesce(col("scrape_date"), lit(scrapeDate)))
-      .withColumn("ingestion_run_id", lit(scrapeDate))
-      .drop("page_path")
-    MarketPipeline.dropTotalsRows(typed.drop("row_idx"))
-  }
+  def normalizeParsedPages(parsed: DataFrame, scrapeDate: String): DataFrame =
+    MarketPipeline.fromParsedPages(parsed)
+      .select(
+        coalesce(col("scrape_date"), lit(scrapeDate)).as("scrape_date"),
+        col("container"), col("price_r"), col("total_value_sold"),
+        col("total_quantity_sold"),
+        regexp_extract(col("page_path"), "([^/]+)/[^/]+$", 1).as("commodity"),
+        regexp_extract(col("page_path"), "([^/]+)\\.html$", 1).as("link_type"),
+        lit(scrapeDate).as("ingestion_run_id"))
+      // `dropTotalsRows` on the container alone: the other business
+      // columns are numbers by now, and a number's text holds neither
+      // "total" nor "summary"
+      .filter(!MarketPipeline.isTotalsText(coalesce(col("container"), lit(""))))
 
   /** `ingestLandedPages` as a Structured Streaming query: pages keep landing
     * under `<pagesRoot>/<commodity>/<linkType>.html` and each one is parsed
@@ -133,7 +136,7 @@ object DailyRun {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         batch.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
+          .write.options(LocalFs.writeOptions(batch.sparkSession)).mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("commodity", "link_type", "scrape_date", "batch_id")
           .parquet(rawRoot)
