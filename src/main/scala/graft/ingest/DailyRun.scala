@@ -1,99 +1,85 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sources.HtmlTable
 import graft.util.LocalFs
 
-/** EP2 — the reference's per-commodity daily loop
-  * (scraper/div_link_handler.py:460-567) as a batch orchestrator:
+/** The reference's daily loop (scraper/div_link_handler.py:460-567) as one
+  * idempotent batch, `day`, plus its continuous form, `ingestPagesStream`.
+  * The connector boundary (browser/UI mechanics, SURVEY.md §2.11) ends
+  * where a day's scrape output has landed as page files under
+  * `<pagesRoot>/<commodity>/<linkType>.html`.
   *
-  *   1. enumerate work units (the commodity pages of the day),
-  *   2. skip already-completed commodities via the ledger anti-join (F4),
-  *   3. per pending commodity: parse the summary table, classify it
-  *      (single vs multi container, A2/A3), branch to the matching flow,
-  *      land each scraped table in the partitioned raw layer (EP3),
-  *   4. commit the commodity's link types to the ledger (ST2): one parquet
-  *      file written on the driver under a hidden name, then renamed into
-  *      place — no Spark job, and all of the commit or none of it is seen.
+  * `day` runs five steps:
+  *   1. list the page files on the driver (no Spark job);
+  *   2. pending: the listed commodities anti-joined against the ledger's
+  *      complete ones for the day (F4/F5, `ExpectedLinkTypes`);
+  *   3. change gate: parse the pending commodities' pages, hash each table
+  *      (`pageTableHashes`) and keep a page only when its hash differs
+  *      from the latest non-null hash the ledger holds for its
+  *      commodity/link type from an earlier day (`changedPages`); a page
+  *      never hashed before passes;
+  *   4. land the changed pages, normalized, with one dynamic-overwrite
+  *      parquet `writeRaw` into `rawRoot` (partitioned by commodity,
+  *      link_type, scrape_date);
+  *   5. commit the day: one ledger row per present link type of each
+  *      pending commodity, carrying that page's table hash (null when the
+  *      page has no table), as one parquet file written on the driver
+  *      under a hidden name and then renamed into place (no Spark job).
   *
-  * Re-running the same day is a no-op: completed commodities are pruned by
-  * the ledger and the raw sink overwrites its own partitions. Failures
-  * between steps leave the ledger unmarked, so a restart retries exactly
-  * the unfinished commodities — the reference's checkpoint/resume contract
-  * without bespoke state files.
+  * Replay contract: the ledger is the day's only state, and its commit is
+  * the last step. A replay of a complete day finds nothing pending and
+  * lands nothing. A day that dies before its commit left the ledger as it
+  * was, so its replay gates against the same hashes, lands into the same
+  * partitions (the dynamic overwrite replaces what the dead run wrote)
+  * and then commits: the raw layer equals an uninterrupted run's. A link
+  * type whose page file is absent is not committed, so its commodity
+  * stays pending until a run of the day finds the page.
   *
-  * The connector boundary (browser/UI mechanics, SURVEY.md §2.11) is
-  * abstracted as `pages`: commodity → (linkType → page HTML).
+  * Commodity and link type names are the page path's segments as Spark's
+  * file URIs spell them (percent-encoded), in the ledger and in the raw
+  * layer alike.
   */
 object DailyRun {
 
   val ExpectedLinkTypes: Seq[String] = Seq("summary", "container", "variety")
 
-  final case class CommodityResult(
-      commodity: String, structure: String, tablesLanded: Int)
+  private val commodityOfPage: Column = regexp_extract(col("page_path"), "([^/]+)/[^/]+$", 1)
+  private val pageKey: Column = regexp_extract(col("page_path"), "([^/]+/[^/]+)\\.html$", 1)
 
-  def run(spark: SparkSession,
-      pages: Map[String, Map[String, String]],
-      scrapeDate: String,
-      rawRoot: String,
-      ledgerPath: String): Seq[CommodityResult] = {
+  /** One market day; returns the commodities it committed, sorted. */
+  def day(spark: SparkSession, pagesRoot: String, scrapeDate: String,
+      rawRoot: String, ledgerPath: String): Seq[String] = {
     import spark.implicits._
-
-    val all = pages.keys.toSeq.sorted.toDF("commodity")
-    val pendingNames =
-      MarketPipeline.pending(all, spark, ledgerPath, scrapeDate, ExpectedLinkTypes)
-        .collect().map(_.getString(0)).toSeq.sorted
-
-    pendingNames.map { commodity =>
-      val linkPages = pages(commodity)
-      val summary = HtmlTable.ingest(spark, linkPages.getOrElse("summary", ""))
-      val enrichedSummary = MarketPipeline.enrich(
-        summary, scrapeDate, commodity, "summary", scrapeDate)
-      val structure = MarketPipeline.classify(enrichedSummary)
-
-      // branch (div_link_handler.py:527-532): both flows scrape the
-      // container and variety tables; the classification selects the
-      // navigation mechanics (multi-container gates on table-change
-      // detection), which have no analytics meaning here — we record the
-      // structure and land the same link types either way.
-      val followUps = Seq("container", "variety")
-
-      val landed = ("summary" -> enrichedSummary) +: followUps.flatMap { lt =>
-        linkPages.get(lt).map { html =>
-          lt -> MarketPipeline.enrich(
-            HtmlTable.ingest(spark, html), scrapeDate, commodity, lt, scrapeDate)
-        }
-      }
-      landed.foreach { case (_, df) =>
-        if (!df.isEmpty) MarketPipeline.writeRaw(df, rawRoot)
-      }
-      // only the link types whose pages were actually present are committed:
-      // marking an absent page as done would make the completeness predicate
-      // prune the commodity forever even though nothing was landed
-      MarketPipeline.recordCompleted(spark, ledgerPath, commodity,
-        landed.map(_._1), scrapeDate)
-      CommodityResult(commodity, structure.structure, landed.size)
+    val root = new Path(pagesRoot)
+    // names as the page rows spell them: URI path segments (percent-encoded)
+    val linkTypes: Map[String, Seq[String]] =
+      Option(root.getFileSystem(spark.sessionState.newHadoopConf())
+          .globStatus(new Path(root, "*/*.html"))).toSeq.flatten
+        .map(_.getPath.toUri.getRawPath.split('/').takeRight(2))
+        .groupMap(_(0))(_(1).stripSuffix(".html"))
+    val pending = MarketPipeline.pending(linkTypes.keys.toSeq.toDF("commodity"), spark,
+        ledgerPath, scrapeDate, ExpectedLinkTypes)
+      .as[String].collect().toSeq.sorted
+    if (pending.nonEmpty) {
+      val parsed = () => HtmlTable.parsePages(HtmlTable.readPages(spark, s"$pagesRoot/*/*.html")
+        .filter(commodityOfPage.isin(pending: _*)))
+      val hashes = MarketPipeline.pageTableHashes(parsed())
+        .select(pageKey, col("table_hash")).as[(String, String)].collect().toMap
+      val changed = MarketPipeline.changedPages(hashes.toSeq.toDF("key", "table_hash"),
+          MarketPipeline.priorHashes(spark, ledgerPath, scrapeDate), "key")
+        .select("key").as[String].collect().toSeq
+      if (changed.nonEmpty)
+        MarketPipeline.writeRaw(normalizeParsedPages(
+          parsed().filter(pageKey.isin(changed: _*)), scrapeDate), rawRoot, "parquet")
+      MarketPipeline.commitLedger(spark, ledgerPath, MarketPipeline.LedgerHashSchema,
+        for (c <- pending; t <- linkTypes(c).sorted)
+          yield Row(c, t, scrapeDate, hashes.getOrElse(s"$c/$t", null)))
     }
-  }
-
-  /** The fleet-scale variant of `run`: pages have already LANDED AS FILES
-    * under `<pagesRoot>/<commodity>/<linkType>.html` (a day's scrape output)
-    * and are ingested fully distributed — wholetext scan, executor-side
-    * parse (`graft.plans.ParseHtmlTable`), positional header binding,
-    * totals filter, partitioned raw sink. The driver never sees a page.
-    *
-    * Returns the cleaned normalized frame it landed (also written to
-    * `rawRoot` partitioned by commodity/link_type/scrape_date when `rawRoot`
-    * is given). Pages missing a date div fall back to `scrapeDate`.
-    */
-  def ingestLandedPages(spark: SparkSession, pagesRoot: String,
-      scrapeDate: String, rawRoot: Option[String] = None): DataFrame = {
-    val cleaned = normalizeParsedPages(HtmlTable.parsePages(
-      HtmlTable.readPages(spark, s"$pagesRoot/*/*.html")), scrapeDate)
-    rawRoot.foreach(root => MarketPipeline.writeRaw(cleaned, root, "parquet"))
-    cleaned
+    pending
   }
 
   /** The shared tail of the distributed ingest: parsed page rows →
@@ -106,7 +92,7 @@ object DailyRun {
         coalesce(col("scrape_date"), lit(scrapeDate)).as("scrape_date"),
         col("container"), col("price_r"), col("total_value_sold"),
         col("total_quantity_sold"),
-        regexp_extract(col("page_path"), "([^/]+)/[^/]+$", 1).as("commodity"),
+        commodityOfPage.as("commodity"),
         regexp_extract(col("page_path"), "([^/]+)\\.html$", 1).as("link_type"),
         lit(scrapeDate).as("ingestion_run_id"))
       // `dropTotalsRows` on the container alone: the other business
@@ -114,8 +100,9 @@ object DailyRun {
       // "total" nor "summary"
       .filter(!MarketPipeline.isTotalsText(coalesce(col("container"), lit(""))))
 
-  /** `ingestLandedPages` as a Structured Streaming query: pages keep landing
-    * under `<pagesRoot>/<commodity>/<linkType>.html` and each one is parsed
+  /** `day`'s parse and landing as a Structured Streaming query, with no
+    * gate and no ledger: pages keep landing under
+    * `<pagesRoot>/<commodity>/<linkType>.html` and each one is parsed
     * executor-side and appended to the raw layer exactly once — the
     * reference's daily loop as a continuous ingest. File-source discovery
     * is the change detection (ST3): a page file is processed when it

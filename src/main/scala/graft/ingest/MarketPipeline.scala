@@ -7,7 +7,6 @@ import org.apache.parquet.example.data.simple.SimpleGroup
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader, ParquetFileWriter}
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
-import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter, SparkToParquetSchemaConverter}
 import org.apache.spark.sql.functions._
@@ -80,18 +79,6 @@ object MarketPipeline {
     * projection copies the expression behind `text` once.
     */
   def isTotalsText(text: Column): Column = lower(text).rlike("total|summary")
-
-  /** A2+A3: table-structure classification driving the reference's
-    * single- vs multi-container branch (div_link_handler.py:223-260).
-    */
-  final case class TableStructure(dataRows: Long, isSingleContainer: Boolean) {
-    def structure: String = if (isSingleContainer) "single_container" else "multi_container"
-  }
-
-  def classify(df: DataFrame): TableStructure = {
-    val n = dropTotalsRows(df).count()
-    TableStructure(n, n <= 1)
-  }
 
   /** Defensive money/number parsing (SURVEY.md §7 "locale/number parsing"):
     * strip currency symbols, spaces and thousands separators before cast.
@@ -231,9 +218,10 @@ object MarketPipeline {
   /** Change gate: keep only `current` rows whose (key, table_hash) is NOT in
     * `prior` — unchanged pages are pruned BEFORE the normalize/land work,
     * new pages (absent from prior) pass through. Both sides are
-    * (keyCol, table_hash) relations; `prior` is typically a persisted hash
-    * ledger from the previous run. An anti-join on the composite key — at
-    * scale the ledger side is small (one row per page) and broadcasts.
+    * (keyCol, table_hash) relations; `DailyRun.day` takes `prior` from the
+    * hashes its completion ledger holds (`priorHashes`). An anti-join on
+    * the composite key — at scale the ledger side is small (one row per
+    * page) and broadcasts.
     */
   def changedPages(current: DataFrame, prior: DataFrame,
       keyCol: String = "page_path"): DataFrame =
@@ -334,36 +322,47 @@ object MarketPipeline {
   // file create plus rename (no Spark job); the read uses a fixed schema
   // (no inference job).
 
-  /** Every ledger file's columns, all STRING: the read schema, and (as
-    * `LedgerParquetSchema`) the schema each commit writes.
+  /** The ledger's read schema and `recordCompleted`'s file schema: three
+    * STRING columns.
     */
   val LedgerSchema: StructType = StructType(
     Seq("commodity", "link_type", "scrape_date").map(StructField(_, StringType)))
 
-  /** `LedgerSchema` as Spark's own parquet writer lays it out
-    * (`optional binary … (STRING)`), so files of either writer read alike.
+  /** `DailyRun.day`'s file schema: `LedgerSchema` plus each page's
+    * `table_hash`, the change gate's state. `LedgerSchema` reads ignore
+    * the extra column; a hash read of a three-column file sees null.
     */
-  private val LedgerParquetSchema: MessageType =
-    new SparkToParquetSchemaConverter().convert(LedgerSchema)
+  private[ingest] val LedgerHashSchema: StructType = LedgerSchema.add("table_hash", StringType)
 
   /** Commit a completion record: one row (commodity, link_type,
-    * scrape_date) per link type, as one parquet file in `ledgerPath`.
+    * scrape_date) per link type, as one parquet file in `ledgerPath` (see
+    * `commitLedger`). Empty `linkTypes` writes no file; readers see the
+    * same ledger either way. A retried commit writes a second file;
+    * `readLedger`'s set read dedups it.
+    */
+  def recordCompleted(spark: SparkSession, ledgerPath: String,
+      commodity: String, linkTypes: Seq[String], scrapeDate: String): Unit =
+    commitLedger(spark, ledgerPath, LedgerSchema,
+      linkTypes.map(t => Row(commodity, t, scrapeDate)))
+
+  /** Write `rows` (STRING columns of `schema`, null allowed) as one parquet
+    * file in `ledgerPath`, on the driver: no Spark job. The file schema is
+    * `schema` as Spark's own parquet writer lays it out
+    * (`optional binary … (STRING)`), so files of either writer read alike.
     *
     * The file is written under a hidden name,
     * `.part-<uuid>.parquet.inprogress`, which Spark's file listing skips,
     * then renamed to `part-<uuid>.parquet`. Readers see all of a commit or
     * none of it: a commit killed before the rename leaves only a hidden
-    * file, and the commodity stays pending. A rename that returns false
+    * file, and its commodities stay pending. A rename that returns false
     * throws, so a completion is never lost silently. On any failure the
-    * hidden file is deleted, then the failure is rethrown.
-    *
-    * Empty `linkTypes` writes no file; readers see the same ledger either
-    * way. A retried commit writes a second file; `readLedger`'s set read
-    * dedups it.
+    * hidden file is deleted, then the failure is rethrown. No rows, no
+    * file.
     */
-  def recordCompleted(spark: SparkSession, ledgerPath: String,
-      commodity: String, linkTypes: Seq[String], scrapeDate: String): Unit =
-    if (linkTypes.nonEmpty) {
+  private[ingest] def commitLedger(spark: SparkSession, ledgerPath: String,
+      schema: StructType, rows: Seq[Row]): Unit =
+    if (rows.nonEmpty) {
+      val fileSchema = new SparkToParquetSchemaConverter().convert(schema)
       // the reader's Hadoop conf, so session-level fs settings (s3a keys)
       // reach the commit too
       val conf = LocalFs.route(spark.sessionState.newHadoopConf())
@@ -373,11 +372,14 @@ object MarketPipeline {
       val tmp = new Path(dir, s".$name.inprogress")
       try {
         val out = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(tmp, conf))
-          .withType(LedgerParquetSchema).withConf(conf)
+          .withType(fileSchema).withConf(conf)
           .withWriteMode(ParquetFileWriter.Mode.CREATE).build()
-        try linkTypes.foreach(t => out.write(new SimpleGroup(LedgerParquetSchema)
-          .append("commodity", commodity).append("link_type", t)
-          .append("scrape_date", scrapeDate)))
+        try rows.foreach { r =>
+          val g = new SimpleGroup(fileSchema)
+          schema.fieldNames.indices.filterNot(r.isNullAt)
+            .foreach(i => g.append(schema.fieldNames(i), r.getString(i)))
+          out.write(g)
+        }
         finally out.close()
         if (!fs.rename(tmp, new Path(dir, name)))
           throw new java.io.IOException(s"ledger commit: rename of $tmp to $name failed")
@@ -388,24 +390,45 @@ object MarketPipeline {
       }
     }
 
+  /** Every ledger file's rows read as `schema`; None for a missing path. */
+  private def ledgerEntries(spark: SparkSession, ledgerPath: String,
+      schema: StructType): Option[DataFrame] =
+    // probe through Spark's reader, not java.io.File — the ledger may live
+    // on any Hadoop filesystem (s3a/hdfs), where a local-file check would
+    // silently report an existing ledger as empty
+    try Some(spark.read.schema(schema).parquet(ledgerPath))
+    catch {
+      case e: AnalysisException if e.getErrorClass == "PATH_NOT_FOUND" => None
+    }
+
   /** The deduplicated ledger: commodity → set of completed link types.
     * A missing or still-empty ledger directory reads as an empty ledger
     * (first run of the day).
     */
-  def readLedger(spark: SparkSession, ledgerPath: String, scrapeDate: String): DataFrame = {
-    // probe through Spark's reader, not java.io.File — the ledger may live
-    // on any Hadoop filesystem (s3a/hdfs), where a local-file check would
-    // silently report an existing ledger as empty
-    val entries =
-      try spark.read.schema(LedgerSchema).parquet(ledgerPath)
-      catch {
-        case e: AnalysisException if e.getErrorClass == "PATH_NOT_FOUND" =>
-          spark.createDataFrame(java.util.List.of[Row](), LedgerSchema)
-      }
-    entries
+  def readLedger(spark: SparkSession, ledgerPath: String, scrapeDate: String): DataFrame =
+    ledgerEntries(spark, ledgerPath, LedgerSchema)
+      .getOrElse(spark.createDataFrame(java.util.List.of[Row](), LedgerSchema))
       .filter(col("scrape_date") === scrapeDate)
       .groupBy(col("commodity"))
       .agg(collect_set(col("link_type")).as("link_types"))
+
+  /** The change gate's prior side for a day: per `key`
+    * ("commodity/link_type") the latest non-null `table_hash` committed
+    * for a day before `scrapeDate` — the latest such day, and within it
+    * the latest commit (file modification time), since a retried day can
+    * commit a page twice.
+    */
+  private[ingest] def priorHashes(spark: SparkSession, ledgerPath: String,
+      scrapeDate: String): DataFrame = {
+    import spark.implicits._
+    ledgerEntries(spark, ledgerPath, LedgerHashSchema).fold(
+      Seq.empty[(String, String)].toDF("key", "table_hash")) { entries =>
+      entries
+        .filter(col("scrape_date") < scrapeDate && col("table_hash").isNotNull)
+        .groupBy(concat_ws("/", col("commodity"), col("link_type")).as("key"))
+        .agg(max_by(col("table_hash"),
+          struct(col("scrape_date"), col("_metadata.file_modification_time"))).as("table_hash"))
+    }
   }
 
   /** F5: commodity complete iff expected ⊆ scraped

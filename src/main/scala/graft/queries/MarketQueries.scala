@@ -124,8 +124,8 @@ object MarketQueries {
         land("apples_golden_delicious/summary.html", FixturePage)
         land("oranges_navel/summary.html", FixturePageB)
         land("bananas/container.html", PageNoTable)
-        graft.ingest.DailyRun
-          .ingestLandedPages(s, dir.toString, "2026-08-12")
+        graft.ingest.DailyRun.normalizeParsedPages(HtmlTable.parsePages(
+            HtmlTable.readPages(s, s"$dir/*/*.html")), "2026-08-12")
           .select(
             col("container"),
             col("price_r").cast("double").as("price_r"),

@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.{ByteBuffer, ByteOrder}
 
-import org.apache.spark.sql.SparkSession
-
 /** One-shot generator for the committed audio-fingerprint fixture table
   * `src/main/resources/graft/fixtures/audio_fp.parquet` (name, payload):
   * half-second PCM16 "recordings" of a square-wave tone whose amplitude
@@ -94,10 +92,6 @@ object GenAudioFpFixtures {
   }
 
   def main(args: Array[String]): Unit = {
-    val outDir = args.headOption.getOrElse("src/main/resources/graft/fixtures")
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     val fp = fixtures().map { case (n, bytes) =>
       n -> Option(graft.plans.AudioFpKernel.computeRow(bytes, 6000))
         .map(r => (r.getLong(0), r.getLong(1)))
@@ -106,17 +100,7 @@ object GenAudioFpFixtures {
       val d = java.lang.Long.bitCount(h1 ^ h2) + java.lang.Long.bitCount(l1 ^ l2)
       println(f"$na%-18s $nb%-18s hamming=$d")
     }
-    val tmp = java.nio.file.Files.createTempDirectory("graft_afpfix_").toString
-    spark.createDataFrame(fixtures()).toDF("name", "payload")
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = java.nio.file.Files.list(java.nio.file.Paths.get(tmp))
-      .filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get()
-    val dest = java.nio.file.Paths.get(outDir, "audio_fp.parquet")
-    java.nio.file.Files.createDirectories(dest.getParent)
-    java.nio.file.Files.copy(part, dest,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    println(s"wrote $dest (${java.nio.file.Files.size(dest)} bytes, " +
-      s"${fixtures().size} fixtures)")
-    spark.stop()
+    FixtureFile.write(args, "audio_fp.parquet")(
+      _.createDataFrame(fixtures()).toDF("name", "payload"))
   }
 }

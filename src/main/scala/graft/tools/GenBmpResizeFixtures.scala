@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.{ByteBuffer, ByteOrder}
 
-import org.apache.spark.sql.SparkSession
-
 /** One-shot generator for the committed resampler-fixture table
   * `src/main/resources/graft/fixtures/images_bmp24.parquet` (name, payload):
   * hand-assembled UNCOMPRESSED 24bpp BMPs (BITMAPINFOHEADER and one
@@ -62,22 +60,7 @@ object GenBmpResizeFixtures {
     "bmp_core12" -> GenImageFixtures.coreHeaderBmp(25, 13),
     "not_bmp" -> Array.tabulate[Byte](64)(i => ((i * 41 + 7) % 251).toByte))
 
-  def main(args: Array[String]): Unit = {
-    val outDir = args.headOption.getOrElse("src/main/resources/graft/fixtures")
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_bmpfix_").toString
-    spark.createDataFrame(fixtures()).toDF("name", "payload")
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = java.nio.file.Files.list(java.nio.file.Paths.get(tmp))
-      .filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get()
-    val dest = java.nio.file.Paths.get(outDir, "images_bmp24.parquet")
-    java.nio.file.Files.createDirectories(dest.getParent)
-    java.nio.file.Files.copy(part, dest,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    println(s"wrote $dest (${java.nio.file.Files.size(dest)} bytes, " +
-      s"${fixtures().size} fixtures)")
-    spark.stop()
-  }
+  def main(args: Array[String]): Unit =
+    FixtureFile.write(args, "images_bmp24.parquet")(
+      _.createDataFrame(fixtures()).toDF("name", "payload"))
 }

@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.{ByteBuffer, ByteOrder}
 
-import org.apache.spark.sql.SparkSession
-
 /** One-shot generator for the committed perceptual-dedup fixture table
   * `src/main/resources/graft/fixtures/images_dhash.parquet` (name, payload):
   * three unrelated "scenes" of avalanche-mixed pixel noise (so cross-scene
@@ -101,10 +99,6 @@ object GenDHashFixtures {
   }
 
   def main(args: Array[String]): Unit = {
-    val outDir = args.headOption.getOrElse("src/main/resources/graft/fixtures")
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // print the planted/cross distances so fixture edits stay honest
     val dh = fixtures().map { case (n, bytes) =>
       n -> Option(graft.plans.DHashKernel.computeRow(bytes))
@@ -114,17 +108,7 @@ object GenDHashFixtures {
       val d = java.lang.Long.bitCount(h1 ^ h2) + java.lang.Long.bitCount(l1 ^ l2)
       println(f"$na%-16s $nb%-16s hamming=$d")
     }
-    val tmp = java.nio.file.Files.createTempDirectory("graft_dhfix_").toString
-    spark.createDataFrame(fixtures()).toDF("name", "payload")
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = java.nio.file.Files.list(java.nio.file.Paths.get(tmp))
-      .filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get()
-    val dest = java.nio.file.Paths.get(outDir, "images_dhash.parquet")
-    java.nio.file.Files.createDirectories(dest.getParent)
-    java.nio.file.Files.copy(part, dest,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    println(s"wrote $dest (${java.nio.file.Files.size(dest)} bytes, " +
-      s"${fixtures().size} fixtures)")
-    spark.stop()
+    FixtureFile.write(args, "images_dhash.parquet")(
+      _.createDataFrame(fixtures()).toDF("name", "payload"))
   }
 }

@@ -3,8 +3,6 @@ package graft.tools
 import java.io.ByteArrayOutputStream
 import java.nio.{ByteBuffer, ByteOrder}
 
-import org.apache.spark.sql.SparkSession
-
 /** One-shot generator for the committed EXIF-fixture table
   * `src/main/resources/graft/fixtures/images_exif.parquet` (name, payload).
   *
@@ -108,21 +106,7 @@ object GenExifFixtures {
     "plain_jpeg_no_exif" -> jpeg(jfifApp0),
     "not_a_jpeg" -> Array.tabulate[Byte](32)(i => ((i * 37 + 11) % 251).toByte))
 
-  def main(args: Array[String]): Unit = {
-    val outDir = args.headOption.getOrElse("src/main/resources/graft/fixtures")
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_exiffix_").toString
-    spark.createDataFrame(fixtures()).toDF("name", "payload")
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = java.nio.file.Files.list(java.nio.file.Paths.get(tmp))
-      .filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get()
-    val dest = java.nio.file.Paths.get(outDir, "images_exif.parquet")
-    java.nio.file.Files.createDirectories(dest.getParent)
-    java.nio.file.Files.copy(part, dest,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    println(s"wrote $dest")
-    spark.stop()
-  }
+  def main(args: Array[String]): Unit =
+    FixtureFile.write(args, "images_exif.parquet")(
+      _.createDataFrame(fixtures()).toDF("name", "payload"))
 }

@@ -3,8 +3,6 @@ package graft.tools
 import java.awt.image.BufferedImage
 import java.io.ByteArrayOutputStream
 
-import org.apache.spark.sql.SparkSession
-
 /** One-shot generator for the committed image-fixture table
   * `src/main/resources/graft/fixtures/images.parquet` (name, payload).
   *
@@ -71,21 +69,7 @@ object GenImageFixtures {
 
   def main(args: Array[String]): Unit = {
     System.setProperty("java.awt.headless", "true")
-    val outDir = args.headOption.getOrElse("src/main/resources/graft/fixtures")
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_imgfix_").toString
-    spark.createDataFrame(fixtures()).toDF("name", "payload")
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = java.nio.file.Files.list(java.nio.file.Paths.get(tmp))
-      .filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get()
-    val dest = java.nio.file.Paths.get(outDir, "images.parquet")
-    java.nio.file.Files.createDirectories(dest.getParent)
-    java.nio.file.Files.copy(part, dest,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    println(s"wrote $dest (${java.nio.file.Files.size(dest)} bytes, " +
-      s"${fixtures().size} fixtures)")
-    spark.stop()
+    FixtureFile.write(args, "images.parquet")(
+      _.createDataFrame(fixtures()).toDF("name", "payload"))
   }
 }

@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.{ByteBuffer, ByteOrder}
 
-import org.apache.spark.sql.SparkSession
-
 /** One-shot generator for the committed TIFF-fixture table
   * `src/main/resources/graft/fixtures/images_tiff.parquet` (name, payload).
   *
@@ -68,22 +66,7 @@ object GenTiffFixtures {
       dropHeight = true),
     "not_a_tiff" -> Array.tabulate[Byte](48)(i => ((i * 41 + 7) % 250).toByte))
 
-  def main(args: Array[String]): Unit = {
-    val outDir = args.headOption.getOrElse("src/main/resources/graft/fixtures")
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_tifffix_").toString
-    spark.createDataFrame(fixtures()).toDF("name", "payload")
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = java.nio.file.Files.list(java.nio.file.Paths.get(tmp))
-      .filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get()
-    val dest = java.nio.file.Paths.get(outDir, "images_tiff.parquet")
-    java.nio.file.Files.createDirectories(dest.getParent)
-    java.nio.file.Files.copy(part, dest,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    println(s"wrote $dest (${java.nio.file.Files.size(dest)} bytes, " +
-      s"${fixtures().size} fixtures)")
-    spark.stop()
-  }
+  def main(args: Array[String]): Unit =
+    FixtureFile.write(args, "images_tiff.parquet")(
+      _.createDataFrame(fixtures()).toDF("name", "payload"))
 }

@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
-
 /** One-shot generator for the committed video-fixture table
   * `src/main/resources/graft/fixtures/video.parquet` (name, payload):
   * hand-built ISO-BMFF (MP4) boxes — big-endian throughout, offsets per the
@@ -74,22 +72,7 @@ object GenVideoFixtures {
     "not_a_video" -> noise(50),
     "empty" -> Array.emptyByteArray)
 
-  def main(args: Array[String]): Unit = {
-    val outDir = args.headOption.getOrElse("src/main/resources/graft/fixtures")
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_videofix_").toString
-    spark.createDataFrame(fixtures()).toDF("name", "payload")
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = java.nio.file.Files.list(java.nio.file.Paths.get(tmp))
-      .filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get()
-    val dest = java.nio.file.Paths.get(outDir, "video.parquet")
-    java.nio.file.Files.createDirectories(dest.getParent)
-    java.nio.file.Files.copy(part, dest,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    println(s"wrote $dest (${java.nio.file.Files.size(dest)} bytes, " +
-      s"${fixtures().size} fixtures)")
-    spark.stop()
-  }
+  def main(args: Array[String]): Unit =
+    FixtureFile.write(args, "video.parquet")(
+      _.createDataFrame(fixtures()).toDF("name", "payload"))
 }

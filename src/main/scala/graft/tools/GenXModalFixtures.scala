@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** One-shot generator for the committed cross-modal training-pair fixture
   * `src/main/resources/graft/fixtures/pairs_xmodal.parquet`
   * (pair_id, img_name, payload, caption): (image, caption) pairs with
@@ -54,30 +52,16 @@ object GenXModalFixtures {
       (9L, "scene_a", img("scene_a"), capD))
   }
 
-  def main(args: Array[String]): Unit = {
-    val outDir = args.headOption.getOrElse("src/main/resources/graft/fixtures")
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val df = spark.createDataFrame(fixtures())
-      .toDF("pair_id", "img_name", "payload", "caption")
-    // print the engine's own verdict so the planted design stays honest
-    graft.operators.PrepPipeline.crossModalDedup(df,
-        "pair_id", "img_name", "payload", "caption",
-        bands = 4, radius = 3, n = 3, numHashes = 12, rowsPerBand = 3,
-        threshold = 0.8)
-      .orderBy("pair_id").collect().foreach(println)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_xmfix_").toString
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = java.nio.file.Files.list(java.nio.file.Paths.get(tmp))
-      .filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get()
-    val dest = java.nio.file.Paths.get(outDir, "pairs_xmodal.parquet")
-    java.nio.file.Files.createDirectories(dest.getParent)
-    java.nio.file.Files.copy(part, dest,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    println(s"wrote $dest (${java.nio.file.Files.size(dest)} bytes, " +
-      s"${fixtures().size} pairs)")
-    spark.stop()
-  }
+  def main(args: Array[String]): Unit =
+    FixtureFile.write(args, "pairs_xmodal.parquet") { spark =>
+      val df = spark.createDataFrame(fixtures())
+        .toDF("pair_id", "img_name", "payload", "caption")
+      // print the engine's own verdict so the planted design stays honest
+      graft.operators.PrepPipeline.crossModalDedup(df,
+          "pair_id", "img_name", "payload", "caption",
+          bands = 4, radius = 3, n = 3, numHashes = 12, rowsPerBand = 3,
+          threshold = 0.8)
+        .orderBy("pair_id").collect().foreach(println)
+      df
+    }
 }

@@ -4,8 +4,8 @@ import org.apache.spark.sql.functions._
 
 import graft.ingest.{DailyRun, MarketPipeline}
 
-/** EP2 orchestrator: full daily run over multiple commodities, resume
-  * semantics, and the typed record layer.
+/** The market day: a full day over multiple commodities, resume
+  * semantics, the typed record layer, and the continuous page ingest.
   */
 class DailyRunSpec extends SparkSpec {
 
@@ -28,23 +28,34 @@ class DailyRunSpec extends SparkSpec {
       "pears" -> Map("summary" -> page(1), "container" -> page(1), "variety" -> page(2)),
     ).view.mapValues(_.view.mapValues(identity).toMap).toMap.take(n)
 
-  test("daily run lands all link types, classifies, and is resume-safe") {
+  /** Lands `pages` as `<root>/<commodity>/<linkType>.html` files. */
+  def landPages(root: String, pages: Map[String, Map[String, String]]): String = {
+    for ((c, byType) <- pages; (t, html) <- byType) {
+      val p = java.nio.file.Paths.get(root, c, s"$t.html")
+      java.nio.file.Files.createDirectories(p.getParent)
+      java.nio.file.Files.writeString(p, html)
+    }
+    root
+  }
+
+  test("day lands all link types and is resume-safe") {
+    val dir = landPages(tmpDir("daily_pages"), pages(2))
     val raw = tmpDir("daily_raw")
     val ledger = tmpDir("daily_ledger")
-    val r1 = DailyRun.run(spark, pages(2), "2026-08-12", raw, ledger)
-    assert(r1.map(_.commodity).sorted == Seq("apples", "pears"))
-    assert(r1.find(_.commodity == "apples").get.structure == "multi_container")
-    assert(r1.find(_.commodity == "pears").get.structure == "single_container")
+    val r1 = DailyRun.day(spark, dir, "2026-08-12", raw, ledger)
+    assert(r1 == Seq("apples", "pears"))
 
-    val landed = MarketPipeline.readRaw(spark, raw)
+    val landed = MarketPipeline.readRaw(spark, raw, "parquet")
     assert(landed.select("commodity").distinct().count() == 2)
     assert(landed.select("link_type").distinct().count() == 3)
     val before = landed.count()
+    // totals rows dropped: 3 + 3 + 6 apples rows, 1 + 1 + 2 pears rows
+    assert(before == 16)
 
     // re-run the same day: everything completed → nothing re-processed
-    val r2 = DailyRun.run(spark, pages(2), "2026-08-12", raw, ledger)
+    val r2 = DailyRun.day(spark, dir, "2026-08-12", raw, ledger)
     assert(r2.isEmpty)
-    assert(MarketPipeline.readRaw(spark, raw).count() == before)
+    assert(MarketPipeline.readRaw(spark, raw, "parquet").count() == before)
   }
 
   test("ingestPagesStream: continuous page ingest is exactly-once across restarts") {
@@ -127,15 +138,20 @@ class DailyRunSpec extends SparkSpec {
   }
 
   test("missing page is NOT marked complete; retry with the page ingests it") {
+    val dir = landPages(tmpDir("partial_pages"), Map("apples" -> (pages(1)("apples") - "variety")))
     val raw = tmpDir("partial_raw")
     val ledger = tmpDir("partial_ledger")
-    val partial = Map("apples" -> (pages(1)("apples") - "variety"))
-    DailyRun.run(spark, partial, "2026-08-12", raw, ledger)
-    // variety absent → commodity still pending
-    val r2 = DailyRun.run(spark, pages(1), "2026-08-12", raw, ledger)
-    assert(r2.map(_.commodity) == Seq("apples"))
-    assert(MarketPipeline.readRaw(spark, raw)
+    assert(DailyRun.day(spark, dir, "2026-08-12", raw, ledger) == Seq("apples"))
+    // variety absent → not committed, commodity still pending
+    assert(MarketPipeline.readLedger(spark, ledger, "2026-08-12").collect()
+      .map(r => r.getString(0) -> r.getSeq[String](1).toSet).toMap ==
+      Map("apples" -> Set("summary", "container")))
+    landPages(dir, pages(1))
+    val r2 = DailyRun.day(spark, dir, "2026-08-12", raw, ledger)
+    assert(r2 == Seq("apples"))
+    assert(MarketPipeline.readRaw(spark, raw, "parquet")
       .filter(col("link_type") === "variety").count() > 0)
+    assert(DailyRun.day(spark, dir, "2026-08-12", raw, ledger).isEmpty)
   }
 
   test("latestWins upsert: newer version wins, update beats base on tie") {
@@ -164,17 +180,17 @@ class DailyRunSpec extends SparkSpec {
   }
 
   test("typed record layer: normalized rows as Dataset[MarketRecord]") {
+    val dir = landPages(tmpDir("typed_pages"), pages(1))
     val raw = tmpDir("typed_raw")
     val ledger = tmpDir("typed_ledger")
-    DailyRun.run(spark, pages(1), "2026-08-12", raw, ledger)
-    val normalized = MarketPipeline.normalize(
-      MarketPipeline.dropTotalsRows(MarketPipeline.readRaw(spark, raw)))
-    val records = MarketPipeline.toRecords(normalized)
+    DailyRun.day(spark, dir, "2026-08-12", raw, ledger)
+    val records = MarketPipeline.toRecords(MarketPipeline.readRaw(spark, raw, "parquet"))
     val r = records.filter(_.commodity == "apples").collect()
     assert(r.nonEmpty)
     assert(r.forall(_.scrape_date.toString == "2026-08-12"))
     val bag1 = r.filter(_.container.contains("Bag 1")).filter(_.link_type == "summary").head
     assert(bag1.price_r.exists(_.doubleValue == 10.0))
+    assert(bag1.total_value_sold.exists(_.doubleValue == 100.0))
     assert(bag1.total_quantity_sold.contains(1L))
   }
 }

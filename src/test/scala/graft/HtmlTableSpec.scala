@@ -94,17 +94,17 @@ class HtmlTableSpec extends SparkSpec {
     assert(bound.head.getAs[Long]("total_quantity_sold") == 42L)
   }
 
-  test("DailyRun.ingestLandedPages lands a cleaned partitioned raw layer from page files") {
+  test("DailyRun.day lands a cleaned partitioned raw layer from page files") {
     import org.apache.spark.sql.functions.col
     val dir = java.nio.file.Files.createTempDirectory("pages2")
     java.nio.file.Files.createDirectories(dir.resolve("apples"))
     java.nio.file.Files.writeString(dir.resolve("apples/summary.html"),
       graft.queries.MarketQueries.FixturePage)
-    val rawRoot = java.nio.file.Files.createTempDirectory("raw").toString + "/raw"
-    val cleaned = graft.ingest.DailyRun.ingestLandedPages(
-      spark, dir.toString, "2026-08-12", Some(rawRoot))
+    val root = java.nio.file.Files.createTempDirectory("raw").toString
+    val rawRoot = s"$root/raw"
+    assert(graft.ingest.DailyRun.day(
+      spark, dir.toString, "2026-08-12", rawRoot, s"$root/ledger") == Seq("apples"))
     // totals row dropped, metadata stamped from the path + page date
-    assert(cleaned.count() == 2)
     val back = spark.read.parquet(rawRoot)
     assert(back.count() == 2)
     val r = back.filter(col("container") === "10kg Bag").head()

@@ -15,8 +15,8 @@ class RenameFailsFileSystem extends RawLocalFileSystem {
   override def rename(src: Path, dst: Path): Boolean = false
 }
 
-/** End-to-end EP3 pipeline (SURVEY.md §3): parse → enrich → classify →
-  * filter → normalize → partitioned sink, plus the incremental ledger
+/** End-to-end EP3 pipeline (SURVEY.md §3): parse → enrich → filter →
+  * normalize → partitioned sink, plus the incremental ledger
   * semantics (ST1/ST2: idempotent re-runs, anti-join pending).
   */
 class MarketPipelineSpec extends SparkSpec {
@@ -48,13 +48,6 @@ class MarketPipelineSpec extends SparkSpec {
     val df = ingestOne("apples")
     assert(df.count() == 3)
     assert(dropTotalsRows(df).count() == 2)
-  }
-
-  test("classify: multi vs single container (div_link_handler.py:248-253)") {
-    assert(!classify(ingestOne("apples")).isSingleContainer)
-    val single = ingestOne("apples").limit(1)
-    val c = classify(single)
-    assert(c.isSingleContainer && c.structure == "single_container")
   }
 
   test("normalize: canonical names + money/long casts survive separators") {
